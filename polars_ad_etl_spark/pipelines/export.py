@@ -2,16 +2,24 @@
 ``{prefix}_{min_date}–{max_date}.csv`` from the first Date column — the export
 loop every reference script ends with (e.g. ``scripts/manaboo_daily.py:108``,
 ``:145``). The Sheets upload leg is available via sources.sheets (driver-side,
-credential-gated)."""
+credential-gated).
+
+One Spark action per export: the date range is observed (``df.observe``)
+while the rows are written to a temp file in ``processed_dir``, which is then
+atomically renamed to the date-range name. A failed write or an empty date
+range leaves no file behind."""
 
 from __future__ import annotations
 
+import os
+import uuid
 from pathlib import Path
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 
 from polars_ad_etl_spark.sinks.csv_bom import write_csv_bom
-from polars_ad_etl_spark.utils import make_date_filename
+from polars_ad_etl_spark.sinks.xlsx import write_xlsx
+from polars_ad_etl_spark.utils import date_filename, date_range_exprs
 
 
 def export_daily(
@@ -27,10 +35,15 @@ def export_daily(
     BOM-CSV — same spreadsheet consumer, no Sheets network dependency."""
     if fmt not in ("csv", "xlsx"):
         raise ValueError(f"unknown export format {fmt!r}")
-    name = make_date_filename(df, prefix)
-    if fmt == "xlsx":
-        from polars_ad_etl_spark.sinks.xlsx import write_xlsx
-
-        out = Path(processed_dir) / (Path(name).stem + ".xlsx")
-        return write_xlsx(df, out)
-    return write_csv_bom(df, Path(processed_dir) / name)
+    obs = Observation()
+    observed = df.observe(obs, *date_range_exprs(df))
+    write = write_xlsx if fmt == "xlsx" else write_csv_bom
+    tmp = Path(processed_dir) / f".{prefix}.{uuid.uuid4().hex}.tmp"
+    try:
+        write(observed, tmp)
+        out = Path(processed_dir) / date_filename(prefix, obs.get, fmt)
+        os.replace(tmp, out)
+    except BaseException:
+        tmp.unlink(missing_ok=True)
+        raise
+    return str(out)

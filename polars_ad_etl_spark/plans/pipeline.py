@@ -18,11 +18,15 @@ detect-source -> clean -> standardize -> union (reference
 - Strict-cast data-quality gate via ANSI mode (reference relies on Polars'
   raise-on-bad-cast, ``multi_source_ad_etl.py:196``).
 
+- Standardize is one SQL projection per frame (rename, typed-null fill and
+  cast in a single ``selectExpr``), so building the plan costs one py4j call
+  per frame rather than several per column.
+
 Scale notes (100 TB design): source detection is schema-based, so it needs
 per-file *schemas*, never per-file data — for CSV we read only the header line
 driver-side; files that detect to the same source are then globbed into a
-single scan so Spark parallelizes over all of them. The per-file driver loop
-is O(#files) metadata work only.
+single scan so Spark parallelizes over all of them. Per-file (or per-group)
+schema inference is issued from a small thread pool, so those jobs overlap.
 """
 
 from __future__ import annotations
@@ -35,8 +39,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from polars_ad_etl_spark.plans.config import PipelineConfig
-from polars_ad_etl_spark.plans.schema import to_struct_type
+from polars_ad_etl_spark.plans.schema import quote_ident, sql_string, to_struct_type
 from polars_ad_etl_spark.sources.tabular import read_tabular_dir
+
+
+def _failed(col: tuple[str, str, str]) -> str:
+    """SQL predicate: the raw value is present but does not cast."""
+    _, sql_type, src = col
+    return f"({src} IS NOT NULL AND TRY_CAST({src} AS {sql_type}) IS NULL)"
 
 
 class SourceDetectionError(ValueError):
@@ -174,9 +184,12 @@ class MultiSourceAdETL:
     def standardize_dataframes(self, mode: str = "strict") -> "MultiSourceAdETL":
         """rename -> add missing columns as typed nulls -> project to schema
         order -> cast to declared types (reference
-        ``multi_source_ad_etl.py:170-200``).
+        ``multi_source_ad_etl.py:170-200``), built as ONE ``selectExpr`` per
+        frame: ``CAST(`raw` AS type) AS `standard``` per column, with quoted
+        identifiers so names holding ``.`` or backticks resolve as written.
 
-        Two strictness modes (SURVEY §1.4):
+        Three strictness modes (SURVEY §1.4); the projection, the audit
+        aggregates and the quarantine flags all come from ``_standard_sources``:
 
         - ``"strict"`` (default): plain ``cast`` under the ANSI session — a
           bad value raises at action time, the Spark equivalent of Polars'
@@ -194,7 +207,7 @@ class MultiSourceAdETL:
         """
         if mode not in ("strict", "audit", "quarantine"):
             raise ValueError(f"unknown cast mode {mode!r}")
-        schema = self.config.standard_schema
+        cast_fn = "CAST" if mode == "strict" else "TRY_CAST"
         src_col = self.config.source_column
         out = []
         self._audits = []
@@ -204,74 +217,62 @@ class MultiSourceAdETL:
                 raise StandardizeError(
                     f"no rename mapping for detected source {f.source!r} ({f.path})"
                 )
-            mapping = self.config.rename_config[f.source]
-            df = f.df.withColumnsRenamed(mapping)
-            missing = {
-                name: F.lit(None).cast(dtype)
-                for name, dtype in schema.items()
-                if name not in df.columns and name != src_col
-            }
-            if missing:
-                df = df.withColumns(missing)
+            cols = self._standard_sources(f)
+            data = [c for c in cols if c[0] != src_col]
+            df = f.df
             if mode == "audit":
-                self._audits.append(
-                    (
-                        f.source,
-                        f.path,
-                        df.agg(
-                            *[
-                                F.sum(
-                                    (
-                                        F.col(name).isNotNull()
-                                        & F.col(name).try_cast(dtype).isNull()
-                                    ).cast("long")
-                                ).alias(name)
-                                for name, dtype in schema.items()
-                                if name != src_col
-                            ]
-                        ),
-                    )
-                )
-                cast = lambda c, t: c.try_cast(t)  # noqa: E731
+                self._audits.append((f.source, f.path, df.selectExpr(*[
+                    f"sum(CAST({_failed(c)} AS BIGINT)) AS {quote_ident(c[0])}"
+                    for c in data
+                ])))
             elif mode == "quarantine":
-                data_cols = [
-                    (name, dtype)
-                    for name, dtype in schema.items()
-                    if name != src_col
-                ]
-                bad_names = F.array_compact(
-                    F.array(
-                        *[
-                            F.when(
-                                F.col(name).isNotNull()
-                                & F.col(name).try_cast(dtype).isNull(),
-                                F.lit(name),
-                            )
-                            for name, dtype in data_cols
-                        ]
-                    )
+                bad = ", ".join(
+                    f"CASE WHEN {_failed(c)} THEN {sql_string(c[0])} END"
+                    for c in data
                 )
-                flagged = df.withColumn("_bad_cols", bad_names)
+                df = df.selectExpr("*", f"array_compact(array({bad})) AS _bad_cols")
+                raw_row = ", ".join(f"{sql_string(n)}, {src}" for n, _, src in data)
                 self._quarantines.append(
-                    flagged.filter(F.size("_bad_cols") > 0).select(
-                        F.lit(f.source).alias("source"),
-                        F.lit(str(f.path)).alias("path"),
-                        F.col("_bad_cols").alias("bad_columns"),
-                        F.to_json(F.struct(*[n for n, _ in data_cols])).alias(
-                            "raw_row"
-                        ),
+                    df.filter("size(_bad_cols) > 0").selectExpr(
+                        f"{sql_string(f.source)} AS source",
+                        f"{sql_string(str(f.path))} AS path",
+                        "_bad_cols AS bad_columns",
+                        f"to_json(named_struct({raw_row})) AS raw_row",
                     )
                 )
-                df = flagged.filter(F.size("_bad_cols") == 0).drop("_bad_cols")
-                cast = lambda c, t: c.try_cast(t)  # noqa: E731
-            else:
-                cast = lambda c, t: c.cast(t)  # noqa: E731
-            df = df.select(
-                *[cast(F.col(name), dtype).alias(name) for name, dtype in schema.items()]
-            )
+                df = df.filter("size(_bad_cols) = 0")
+            df = df.selectExpr(*[
+                f"{cast_fn}({src} AS {sql_type}) AS {quote_ident(name)}"
+                for name, sql_type, src in cols
+            ])
             out.append(TaggedFrame(f.source, df, f.path))
         self.frames = out
         return self
+
+    def _standard_sources(self, f: TaggedFrame) -> list[tuple[str, str, str]]:
+        """``(name, SQL type, source expression)`` per standard column, in
+        schema order: the quoted raw column the source's rename map sends
+        there (keys match headers case-insensitively, like Spark's resolver),
+        the column of that name when none does, or a typed NULL when the
+        frame has neither (the source column is never filled)."""
+        mapping = self.config.rename_config[f.source]
+        folded = {k.lower(): v for k, v in mapping.items()}
+        raw_for: dict[str, str] = {}
+        for c in f.df.columns:
+            std = mapping.get(c, folded.get(c.lower(), c))
+            if std in raw_for and std in self.config.standard_schema:
+                raise StandardizeError(
+                    f"columns {raw_for[std]!r} and {c!r} both standardize "
+                    f"to {std!r} ({f.path})"
+                )
+            raw_for.setdefault(std, c)
+        out = []
+        for name, dtype in self.config.standard_schema.items():
+            sql_type = dtype.simpleString()
+            raw = raw_for.get(name, name if name == self.config.source_column else None)
+            src = f"CAST(NULL AS {sql_type})" if raw is None else quote_ident(raw)
+            out.append((name, sql_type, src))
+        return out
 
     def cast_audit(self) -> DataFrame:
         """Audit-mode report: one row per (source, path, column) with the
@@ -287,7 +288,7 @@ class MultiSourceAdETL:
             for name in self.config.standard_schema
             if name != self.config.source_column
         ]
-        stack_args = ", ".join(f"'{c}', `{c}`" for c in cols)
+        stack_args = ", ".join(f"{sql_string(c)}, {quote_ident(c)}" for c in cols)
         parts = [
             agg.select(
                 F.lit(source).alias("source"),

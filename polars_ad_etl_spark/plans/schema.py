@@ -22,6 +22,18 @@ Float64 = T.DoubleType()
 Date = T.DateType()
 
 
+def quote_ident(name: str) -> str:
+    """Backtick-quote a column name for a SQL expression string, so names
+    with ``.``, spaces, backticks or non-ASCII letters resolve as one
+    identifier (``F.col("Avg. CPC")`` would parse as struct-field access)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string(value: str) -> str:
+    """A single-quoted SQL string literal holding ``value``."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def to_struct_type(schema: dict[str, T.DataType], nullable: bool = True) -> T.StructType:
     """Ordered dict -> StructType, preserving insertion order as column order."""
     return T.StructType(

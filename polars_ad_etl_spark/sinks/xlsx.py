@@ -49,8 +49,9 @@ def _cell(ref: str, v: object) -> str:
 
 
 def write_xlsx(df: DataFrame, path: str | Path, sheet: str = "Sheet1") -> str:
-    """Collect (Arrow-batched) and write one worksheet. Values pass through
-    Python types from ``collect()``; dates/decimals stringify via ``str``."""
+    """``collect()`` the rows to the driver and write one worksheet. Values
+    pass through as the Python types ``collect()`` returns; dates/decimals
+    stringify via ``str``."""
     header = df.columns
     rows = df.collect()
 

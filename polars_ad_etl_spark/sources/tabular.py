@@ -14,18 +14,28 @@ nothing matched. Spark mapping:
   is gated so missing engine deps degrade to a clear error.
 
 Per-file reads are required because source detection is schema-based
-(set-of-columns). At 100k-file scale, detection should read headers only —
+(set-of-columns). Inference makes each CSV read eager (two small jobs), so
+the reads are issued from a small thread pool (``read_concurrently``): the
+jobs stay the same, their wall time overlaps, and they keep the caller's job
+group. At 100k-file scale, detection should read headers only —
 ``read_csv_header`` does that with a single-line driver read — after which
-same-source files can be globbed into one scan.
+same-source files are globbed into one scan (``read_csv_dir_grouped``).
 """
 
 from __future__ import annotations
 
+import functools
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
+
+R = TypeVar("R")
 
 
 class EmptyDirectoryError(FileNotFoundError):
@@ -33,14 +43,17 @@ class EmptyDirectoryError(FileNotFoundError):
 
 
 def read_csv(
-    spark: SparkSession, path: str | Path, schema: T.StructType | None = None
+    spark: SparkSession,
+    path: str | Path | list[str],
+    schema: T.StructType | None = None,
 ) -> DataFrame:
+    """One CSV file, or a list of same-header files as one scan."""
     reader = spark.read.option("header", True)
     if schema is not None:
         reader = reader.schema(schema)
     else:
         reader = reader.option("inferSchema", True)
-    return reader.csv(str(path))
+    return reader.csv(path if isinstance(path, list) else str(path))
 
 
 def read_excel(spark: SparkSession, path: str | Path) -> DataFrame:
@@ -174,6 +187,28 @@ def read_csv_header(path: str | Path) -> list[str]:
         return next(csv.reader(fh))
 
 
+_READERS = {
+    ".csv": read_csv,
+    ".xlsx": lambda spark, p, schema: read_excel(spark, p),
+    ".xls": lambda spark, p, schema: read_excel(spark, p),
+    ".jsonl": read_jsonl,
+    ".ndjson": read_jsonl,
+    ".parquet": lambda spark, p, schema: spark.read.parquet(str(p)),
+    ".orc": lambda spark, p, schema: read_orc(spark, p),
+}
+
+
+def read_concurrently(spark: SparkSession, reads: list[Callable[[], R]]) -> list[R]:
+    """Run each read from a small thread pool (one thread per read, capped
+    at ``defaultParallelism``) and return the results in input order. Each
+    read is wrapped in ``inheritable_thread_target`` so the caller's job
+    group, local properties and tags reach the jobs it runs."""
+    inherit = inheritable_thread_target(spark)
+    workers = min(len(reads), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        return list(pool.map(lambda read: read(), [inherit(r) for r in reads]))
+
+
 def read_csv_dir_grouped(
     spark: SparkSession,
     raw_dir: str | Path,
@@ -184,7 +219,8 @@ def read_csv_dir_grouped(
     (source, header), and hand each group to Spark as ONE distributed scan —
     so schema inference and reading parallelize over the whole group instead
     of running once per file. Returns ``(source, paths, DataFrame)`` per
-    group, deterministic (sorted paths, insertion-ordered groups)."""
+    group, deterministic (sorted paths, insertion-ordered groups); the
+    groups' inference jobs are issued concurrently (``read_concurrently``)."""
     groups: dict[tuple[str, tuple[str, ...]], list[str]] = {}
     for p in sorted(Path(raw_dir).glob("*.csv")):
         header = tuple(read_csv_header(p))
@@ -192,16 +228,10 @@ def read_csv_dir_grouped(
         groups.setdefault((src, header), []).append(str(p))
     if not groups:
         raise EmptyDirectoryError(f"no .csv files found in {raw_dir}")
-    return [
-        (
-            src,
-            paths,
-            spark.read.option("header", True)
-            .option("inferSchema", True)
-            .csv(paths),
-        )
-        for (src, _), paths in groups.items()
-    ]
+    dfs = read_concurrently(
+        spark, [functools.partial(read_csv, spark, paths) for paths in groups.values()]
+    )
+    return [(src, paths, df) for ((src, _), paths), df in zip(groups.items(), dfs)]
 
 
 def read_tabular_dir(
@@ -210,22 +240,18 @@ def read_tabular_dir(
     schema: T.StructType | None = None,
 ) -> list[tuple[str, DataFrame]]:
     """Enumerate + dispatch. Returns ``(path, DataFrame)`` pairs in sorted
-    path order (deterministic, like the reference's directory iteration)."""
+    path order (deterministic, like the reference's directory iteration);
+    the per-file reads run concurrently (``read_concurrently``)."""
     raw = Path(raw_dir)
-    out: list[tuple[str, DataFrame]] = []
-    for p in sorted(raw.iterdir()) if raw.is_dir() else []:
-        if p.suffix.lower() == ".csv":
-            out.append((str(p), read_csv(spark, p, schema)))
-        elif p.suffix.lower() in (".xlsx", ".xls"):
-            out.append((str(p), read_excel(spark, p)))
-        elif p.suffix.lower() in (".jsonl", ".ndjson"):
-            out.append((str(p), read_jsonl(spark, p, schema)))
-        elif p.suffix.lower() == ".parquet":
-            out.append((str(p), spark.read.parquet(str(p))))
-        elif p.suffix.lower() == ".orc":
-            out.append((str(p), read_orc(spark, p)))
-    if not out:
+    paths = [
+        p for p in (sorted(raw.iterdir()) if raw.is_dir() else [])
+        if p.suffix.lower() in _READERS
+    ]
+    if not paths:
         raise EmptyDirectoryError(
             f"no .csv/.xlsx/.jsonl/.parquet/.orc files found in {raw_dir}"
         )
-    return out
+    dfs = read_concurrently(spark, [
+        functools.partial(_READERS[p.suffix.lower()], spark, p, schema) for p in paths
+    ])
+    return list(zip(map(str, paths), dfs))

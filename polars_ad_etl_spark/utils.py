@@ -3,34 +3,49 @@
 Pure-Python helpers mirroring the reference's ``src/utils/utils.py``:
 date-range filenames (V1), A1-notation ranges for the Sheets connector (V2),
 and a columnar CLI text layout debug aid (V3). The only Spark interaction is
-the min/max aggregation and the row count, both single-action scalars.
+the min/max aggregation and the row count, both single-action scalars; the
+daily export observes the same min/max during its write instead.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from polars_ad_etl_spark.plans.schema import quote_ident
 
-def date_column_range(df: DataFrame) -> tuple[str, _dt.date, _dt.date]:
-    """(name, min, max) of the first DateType column; raises if none exists
-    (reference ``utils.py:6-26``, D3 min/max at ``:23-24``)."""
+
+def date_range_exprs(df: DataFrame) -> list[Column]:
+    """min/max aggregates (``mn``, ``mx``) of the first DateType column;
+    raises if none exists (reference ``utils.py:6-26``, D3 min/max at
+    ``:23-24``). Shared by ``make_date_filename`` (its own aggregate) and
+    ``export_daily`` (observed during the write, no extra pass)."""
     date_cols = [f.name for f in df.schema.fields if isinstance(f.dataType, T.DateType)]
     if not date_cols:
         raise ValueError("DataFrame has no Date column for a date-range filename")
-    col = date_cols[0]
-    row = df.agg(F.min(col).alias("mn"), F.max(col).alias("mx")).first()
-    return col, row["mn"], row["mx"]
+    col = F.col(quote_ident(date_cols[0]))
+    return [F.min(col).alias("mn"), F.max(col).alias("mx")]
+
+
+def date_filename(prefix: str, dates: Row | dict[str, _dt.date | None], ext: str = "csv") -> str:
+    """``{prefix}_{min}–{max}.{ext}`` (en-dash) from the values of
+    ``date_range_exprs``; raises when the Date column held no value (empty
+    frame or all nulls) instead of naming ``None–None``."""
+    mn, mx = dates["mn"], dates["mx"]
+    if mn is None or mx is None:
+        raise ValueError(
+            f"the first Date column is empty or all null; no date range to name {prefix!r} by"
+        )
+    return f"{prefix}_{mn}–{mx}.{ext}"
 
 
 def make_date_filename(df: DataFrame, prefix: str, ext: str = "csv") -> str:
     """``{prefix}_{min}–{max}.{ext}`` (en-dash) from the first Date column
-    (reference ``utils.py:6-26``)."""
-    _, mn, mx = date_column_range(df)
-    return f"{prefix}_{mn}–{mx}.{ext}"
+    (reference ``utils.py:6-26``); one aggregate job."""
+    return date_filename(prefix, df.agg(*date_range_exprs(df)).first(), ext)
 
 
 def column_letter(n: int) -> str:

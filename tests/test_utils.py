@@ -42,6 +42,18 @@ def test_make_date_filename_requires_date_column(spark):
         make_date_filename(df, "x")
 
 
+def test_make_date_filename_rejects_empty_date_range(spark):
+    all_null = spark.createDataFrame([(None, 1)], "Day date, v int")
+    for df in (all_null, all_null.limit(0)):
+        with pytest.raises(ValueError, match="empty or all null"):
+            make_date_filename(df, "x")
+
+
+def test_make_date_filename_dotted_date_column(spark):
+    df = spark.createDataFrame([(dt.date(2024, 1, 2),)], "`Report.day` date")
+    assert make_date_filename(df, "r") == "r_2024-01-02–2024-01-02.csv"
+
+
 def test_format_as_columns():
     out = format_as_columns(["aa", "b", "c", "d"], n_cols=2, width=6)
     assert out == "1. aa 2. b\n3. c  4. d"
