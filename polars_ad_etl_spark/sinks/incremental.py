@@ -13,14 +13,82 @@ each micro-batch rewrites the partitions it contains. Combined with a
 checkpoint location this gives effectively-once output on a plain parquet
 table (a replayed batch overwrites its own partitions with identical
 content) — no transactional table format needed.
+
+Every landed file costs one micro-batch. The three foreachBatch sinks start
+through :func:`_start_foreach_batch`, which turns off Spark's no-data
+micro-batches for that query when the only stateful operators upstream are
+de-duplications: the sinks do nothing with an empty batch, and a
+``Deduplicate``/``DeduplicateWithinWatermark`` never emits rows when the
+watermark advances, so a no-data batch behind them would only evict state —
+which the next data batch does with the same watermark. Upstreams that DO
+emit on watermark advance (streaming aggregates and windows, stream-stream
+joins, ``[FlatMap]GroupsWithState``, ``TransformWithState*``) keep Spark's
+default, so closed windows reach the sink without waiting for more data.
 """
 
 from __future__ import annotations
 
+import shutil
+import threading
 from pathlib import Path
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from polars_ad_etl_spark.plans.schema import quote_ident
+
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+# Name fragments of the logical operators that can emit rows when only the
+# watermark moves (window/aggregate finalization, outer-join rows, state
+# timeouts and timers). A plan with none of them needs no no-data batches.
+_EMITS_ON_WATERMARK = ("Aggregate", "Distinct", "Join", "WithState")
+# Serializes set-start-restore of the session conf across sink starts.
+_START_LOCK = threading.Lock()
+
+
+def _emits_on_watermark(stream_df: DataFrame) -> bool:
+    """True if the analyzed plan holds an operator that may emit rows on a
+    watermark advance alone (classic-mode plan internals, as in
+    ``plans/audit.py``)."""
+    stack = [stream_df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        if any(k in node.nodeName() for k in _EMITS_ON_WATERMARK):
+            return True
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return False
+
+
+def _start_foreach_batch(
+    stream_df: DataFrame,
+    checkpoint: str | Path,
+    fn: Callable[[DataFrame, int], None],
+) -> StreamingQuery:
+    """Start an append-mode foreachBatch query. Unless the plan emits on
+    watermark advance, no-data micro-batches are turned off for this query
+    only: Spark copies the session conf into the query at ``start()``, and
+    the session's previous value is restored right after."""
+    writer = (
+        stream_df.writeStream.outputMode("append")
+        .option("checkpointLocation", str(checkpoint))
+        .foreachBatch(fn)
+    )
+    if _emits_on_watermark(stream_df):
+        return writer.start()
+    conf = stream_df.sparkSession.conf
+    with _START_LOCK:
+        prev = conf.get(_NO_DATA_BATCHES, None)
+        conf.set(_NO_DATA_BATCHES, "false")
+        try:
+            return writer.start()
+        finally:
+            if prev is None:
+                conf.unset(_NO_DATA_BATCHES)
+            else:
+                conf.set(_NO_DATA_BATCHES, prev)
 
 
 def write_partition_overwrite(
@@ -54,15 +122,11 @@ def stream_to_partitioned_parquet(
     plain append mode and dedup on replay instead."""
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # an empty dynamic-overwrite write would still create an empty store
         if not batch_df.isEmpty():
             write_partition_overwrite(batch_df, path, partition_cols)
 
-    return (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", str(checkpoint))
-        .foreachBatch(_write_batch)
-        .start()
-    )
+    return _start_foreach_batch(stream_df, checkpoint, _write_batch)
 
 
 def upsert_latest_by_key(
@@ -83,8 +147,6 @@ def upsert_latest_by_key(
     partition-overwrite primitive above with key-range partitions so a batch
     rewrites only the ranges it touches.
     """
-    from pyspark.sql import Window, functions as F
-
     spark = batch_df.sparkSession
     p = Path(path)
     merged = batch_df
@@ -107,8 +169,6 @@ def upsert_latest_by_key(
     # copy under either `path`, `__old`, or `__new`.
     tmp = p.with_name(p.name + "__new")
     latest.write.mode("overwrite").parquet(str(tmp))
-    import shutil
-
     old = p.with_name(p.name + "__old")
     if old.exists():  # leftover from a previous crash mid-swap
         shutil.rmtree(old)
@@ -133,15 +193,11 @@ def stream_upsert_latest(
     column."""
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        # an empty batch would otherwise rewrite the whole store
         if not batch_df.isEmpty():
             upsert_latest_by_key(batch_df, path, key_cols, version_cols)
 
-    return (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", str(checkpoint))
-        .foreachBatch(_apply)
-        .start()
-    )
+    return _start_foreach_batch(stream_df, checkpoint, _apply)
 
 
 # ------------------------------------------------ incremental aggregation
@@ -157,9 +213,29 @@ def stream_upsert_latest(
 # aggregate uses, externalized to storage. Compaction folds deltas into a
 # consolidated partial when the dir count grows; totals are invariant.
 #
+# One Spark action per batch: the partial is written while an Observation
+# sums its cnt column (the batch's row count), instead of being probed with
+# isEmpty() first, which would run the upstream stateful plan twice. A
+# batch that reduced to no rows — empty, or every row a duplicate — has its
+# just-written dir removed, so it leaves no delta, and a replay of it
+# removes the same dir again.
+#
 # At 100 TB: each delta is |keys|-sized (tiny), the view's final combine is
 # one map-side-combinable aggregate over |batches|x|keys| rows, and state
 # never rewrites the whole store per batch (contrast upsert_latest_by_key).
+#
+# Column names are backtick-quoted throughout, so keys and values such as
+# "Avg. CPC" resolve as one column rather than as struct-field access.
+
+
+def _partial_agg(df: DataFrame, key_cols: list[str], value_col: str) -> DataFrame:
+    """Per-key (cnt, sum_<value>) partial; the sum is decimal-exact."""
+    return df.groupBy(*[F.col(quote_ident(c)) for c in key_cols]).agg(
+        F.count("*").alias("cnt"),
+        F.sum(F.col(quote_ident(value_col)).cast("decimal(25,6)"))
+        .cast("double")
+        .alias(f"sum_{value_col}"),
+    )
 
 
 def write_agg_delta(
@@ -175,15 +251,13 @@ def write_agg_delta(
 def read_incremental_agg(spark, path: str | Path, key_cols: list[str]) -> DataFrame:
     """The consolidated view: final-combine every delta's partial counts and
     sums. Columns named ``cnt`` and ``sum_*`` are combined additively."""
-    from pyspark.sql import functions as F
-
     deltas = spark.read.parquet(str(path))
     sum_cols = [
         c for c in deltas.columns
         if c == "cnt" or c.startswith("sum_")
     ]
-    return deltas.groupBy(*key_cols).agg(
-        *[F.sum(c).alias(c) for c in sum_cols]
+    return deltas.groupBy(*[F.col(quote_ident(c)) for c in key_cols]).agg(
+        *[F.sum(F.col(quote_ident(c))).alias(c) for c in sum_cols]
     )
 
 
@@ -196,27 +270,19 @@ def stream_incremental_agg(
 ) -> StreamingQuery:
     """foreachBatch additive-aggregate sink: per batch, reduce the raw rows
     to a per-key (cnt, sum_<value>) partial and idempotently write it under
-    the batch's delta dir. Exactly-once per key under replay because a
-    re-delivered batch overwrites its own delta with identical content."""
-    from pyspark.sql import functions as F
+    the batch's delta dir, in one Spark action. Exactly-once per key under
+    replay because a re-delivered batch overwrites its own delta with
+    identical content; a batch that reduces to no rows leaves no delta."""
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = batch_df.groupBy(*key_cols).agg(
-            F.count("*").alias("cnt"),
-            F.sum(F.col(value_col).cast("decimal(25,6)"))
-            .cast("double")
-            .alias(f"sum_{value_col}"),
-        )
-        write_agg_delta(partial, path, batch_id)
+        obs = Observation()
+        partial = _partial_agg(batch_df, key_cols, value_col)
+        rows = F.coalesce(F.sum("cnt"), F.lit(0)).alias("rows")
+        out = write_agg_delta(partial.observe(obs, rows), path, batch_id)
+        if obs.get["rows"] == 0:
+            shutil.rmtree(out)
 
-    return (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", str(checkpoint))
-        .foreachBatch(_apply)
-        .start()
-    )
+    return _start_foreach_batch(stream_df, checkpoint, _apply)
 
 
 def compact_agg_deltas(
@@ -226,8 +292,6 @@ def compact_agg_deltas(
     convention) and remove the originals. Run in a maintenance window (no
     concurrent writer for the same dirs); totals are invariant because the
     consolidated partial is itself just a partial."""
-    import shutil
-
     p = Path(path)
     consolidated = read_incremental_agg(spark, p, key_cols)
     tmp = p.with_name(p.name + "__compact")
@@ -271,15 +335,8 @@ def join_agg_delta(
     append-only deltas to the A⋈B GROUP BY view. Append the result with
     ``write_agg_delta``; ``read_incremental_agg`` then serves the
     maintained view."""
-    from pyspark.sql import functions as F
-
     b_new = b_old.unionByName(b_delta)
     contributions = F.broadcast(a_delta).join(b_new, on).unionByName(
         a_old.join(F.broadcast(b_delta), on)
     )
-    return contributions.groupBy(*key_cols).agg(
-        F.count("*").alias("cnt"),
-        F.sum(F.col(value_col).cast("decimal(25,6)"))
-        .cast("double")
-        .alias(f"sum_{value_col}"),
-    )
+    return _partial_agg(contributions, key_cols, value_col)

@@ -355,7 +355,14 @@ def daily_active_users_approx_stream(
 def dedup_events_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Stateful streaming dedup on event_id within the watermark horizon —
     ``dropDuplicatesWithinWatermark`` keys state by id and expires it with
-    the watermark, so state stays bounded on an unbounded stream."""
+    the watermark, so state stays bounded on an unbounded stream.
+
+    Behind the foreachBatch sinks of ``sinks/incremental.py`` the query runs
+    no no-data micro-batches, so expired keys are evicted at the next data
+    batch rather than as soon as the watermark passes them. Duplicates within
+    the threshold are dropped either way. A re-send that arrives after its
+    key expired may be dropped instead of re-emitted; Spark already leaves
+    that case to batch boundaries."""
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
