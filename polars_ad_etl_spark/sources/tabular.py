@@ -180,11 +180,12 @@ def read_orc(spark: SparkSession, path: str | Path) -> DataFrame:
 
 def read_csv_header(path: str | Path) -> list[str]:
     """Read only the header line of a CSV (for schema-based source detection
-    at scale — O(1) bytes per file instead of a full inference pass)."""
+    at scale — O(1) bytes per file instead of a full inference pass). An
+    empty file has no columns, as for the per-file read path."""
     import csv
 
     with open(path, newline="", encoding="utf-8-sig") as fh:
-        return next(csv.reader(fh))
+        return next(csv.reader(fh), [])
 
 
 _READERS = {

@@ -9,21 +9,23 @@ artifact (BENCH_r{N}_layout.json) with, per workload twin:
 
 - flat vs bucketed wall (median of 3 after a compile warmup) — host-noisy
   at small SF, reported for completeness;
-- flat vs bucketed SHUFFLE BYTES — the load-immune signal: the bytes a
-  bucketed pass stops moving are exactly the bytes the flat pass shuffles,
-  at every scale;
-- the one-time materialization cost (wall + shuffle write) of each store;
-- bytes-based break-even: materialization shuffle-write divided by
+- flat vs bucketed SHUFFLE RECORDS — the load-immune signal: the records
+  a bucketed pass stops moving are exactly the records the flat pass
+  shuffles, at every scale;
+- the one-time materialization cost (wall + shuffle records) of each store;
+- records-based break-even: materialization shuffle records divided by
   per-pass shuffle savings = number of passes after which the layout has
-  paid for itself (the wall-based figure is printed alongside but bytes
+  paid for itself (the wall-based figure is printed alongside but records
   are the number that transfers to a 1000-executor cluster).
+
+Shuffle records and input bytes come from perfbench's Tracer: each
+measured pass is one traced op, and its figures sum over every job it ran.
 
 Usage: python scripts/layout_bench.py [out.json] [sf_dir]
 """
 
 from __future__ import annotations
 
-import importlib.util
 import json
 import shutil
 import statistics
@@ -36,11 +38,7 @@ sys.path.insert(0, str(_ROOT))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-_spec = importlib.util.spec_from_file_location("bench_module", _ROOT / "bench.py")
-_bench = importlib.util.module_from_spec(_spec)
-sys.modules.setdefault("bench_module", _bench)
-_spec.loader.exec_module(_bench)
-
+from perfbench.tracing import Tracer  # noqa: E402
 from polars_ad_etl_spark.operators.dedup import dedup_minhash_lsh_pairs  # noqa: E402
 from polars_ad_etl_spark.operators.similarity import sim_lsh_bucketed_topk  # noqa: E402
 from polars_ad_etl_spark.session import get_spark  # noqa: E402
@@ -54,21 +52,25 @@ from polars_ad_etl_spark.sources.star import (  # noqa: E402
 from polars_ad_etl_spark.sources.star import _bucketed_root  # noqa: E402
 
 
-def _timed(metrics, fn, n=3):
-    """Median wall of n runs (after one compile warmup) + last run's stage
-    metrics delta."""
+def _figures(tracer, op) -> dict:
+    """Shuffle records and input bytes of every job one traced op ran."""
+    spans = tracer.op_spans[op]
+    return {k: int(sum(s.figures[k] for s in spans))
+            for k in ("shuffle_records", "input_bytes")}
+
+
+def _timed(tracer, key, fn, n=3):
+    """Median wall of n runs (after one compile warmup) + the last run's
+    shuffle records and input bytes."""
     fn().write.format("noop").mode("overwrite").save()  # compile + warm
-    walls, delta = [], None
-    for _ in range(n):
-        metrics.snapshot()
-        t0 = time.monotonic()
-        fn().write.format("noop").mode("overwrite").save()
-        walls.append(round(time.monotonic() - t0, 3))
-        delta = metrics.delta() or delta
+    walls = []
+    for i in range(n):
+        with tracer.op((key, i)):
+            t0 = time.monotonic()
+            fn().write.format("noop").mode("overwrite").save()
+            walls.append(round(time.monotonic() - t0, 3))
     return {"wall_sec_median": statistics.median(walls), "walls": walls,
-            "shuffle_read_bytes": (delta or {}).get("shuffle_read_bytes"),
-            "shuffle_write_bytes": (delta or {}).get("shuffle_write_bytes"),
-            "input_bytes": (delta or {}).get("input_bytes")}
+            **_figures(tracer, (key, n - 1))}
 
 
 def main() -> int:
@@ -76,9 +78,10 @@ def main() -> int:
     sf = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     spark = get_spark(
         "layout-bench", master="local[8]", shuffle_partitions=8,
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "0"},
+        extra_conf=Tracer.SPARK_CONF,
     )
-    metrics = _bench._StageMetrics(spark)
+    tracer = Tracer()
+    tracer.attach(spark)
 
     # fresh stores so materialization is really measured
     for t in list(spark.catalog.listTables()):
@@ -92,13 +95,11 @@ def main() -> int:
         ("documents_by_id", load_documents_bucketed_by_id),
         ("embeddings_by_id", load_embeddings_bucketed),
     ):
-        metrics.snapshot()
-        t0 = time.monotonic()
-        loader(spark, sf)
-        d = metrics.delta() or {}
-        mat[name] = {"wall_sec": round(time.monotonic() - t0, 3),
-                     "shuffle_write_bytes": d.get("shuffle_write_bytes"),
-                     "input_bytes": d.get("input_bytes")}
+        with tracer.op(("materialize", name)):
+            t0 = time.monotonic()
+            loader(spark, sf)
+            wall = round(time.monotonic() - t0, 3)
+        mat[name] = {"wall_sec": wall, **_figures(tracer, ("materialize", name))}
 
     flat_docs = lambda: spark.read.parquet(f"{sf}/documents.parquet")  # noqa: E731
 
@@ -176,42 +177,41 @@ def main() -> int:
         modes = {}
         for mode, wrap in (("aqe_default", lambda f: f()),
                            ("no_broadcast", _no_broadcast)):
-            flat = wrap(lambda: _timed(metrics, flat_fn))
-            bucketed = wrap(lambda: _timed(metrics, bucketed_fn))
-            saved = None
-            be = None
-            if (flat["shuffle_read_bytes"] is not None
-                    and bucketed["shuffle_read_bytes"] is not None):
-                saved = flat["shuffle_read_bytes"] - bucketed["shuffle_read_bytes"]
-                w = (mat[store].get("shuffle_write_bytes") or 0)
-                be = round(w / saved, 2) if saved and saved > 0 else None
+            flat = wrap(lambda: _timed(tracer, (name, mode, "flat"), flat_fn))
+            bucketed = wrap(
+                lambda: _timed(tracer, (name, mode, "bucketed"), bucketed_fn))
+            saved = flat["shuffle_records"] - bucketed["shuffle_records"]
+            w = mat[store]["shuffle_records"]
+            be = round(w / saved, 2) if saved > 0 else None
             modes[mode] = {
                 "flat": flat, "bucketed": bucketed,
-                "shuffle_bytes_saved_per_pass": saved,
-                "break_even_passes_bytes": be,
+                "shuffle_records_saved_per_pass": saved,
+                "break_even_passes_records": be,
             }
             print(f"{name}[{mode}]: flat {flat['wall_sec_median']}s/"
-                  f"{flat['shuffle_read_bytes']}B shuffle vs bucketed "
+                  f"{flat['shuffle_records']} shuffle records vs bucketed "
                   f"{bucketed['wall_sec_median']}s/"
-                  f"{bucketed['shuffle_read_bytes']}B; saved/pass {saved}B, "
-                  f"break-even {be} passes", flush=True)
+                  f"{bucketed['shuffle_records']}; saved/pass {saved} "
+                  f"records, break-even {be} passes", flush=True)
         modes["store"] = store
         results[name] = modes
 
     artifact = {"sf_dir": sf, "n_runs": 3,
                 "materialization": mat, "twins": results,
-                "note": ("bytes are the load-immune signal; walls at this "
-                         "SF are host-noisy and fixed-cost dominated. "
+                "note": ("shuffle records are the load-immune signal; "
+                         "walls at this SF are host-noisy and fixed-cost "
+                         "dominated. "
                          "no_broadcast models the 100-TB regime where the "
                          "payload side exceeds any broadcast threshold; "
                          "Spark's bucketBy write shuffles nothing (tasks "
                          "write bucket files in place), so break-even in "
-                         "bytes is immediate — the write cost is sort time "
+                         "records is immediate — the write cost is sort time "
                          "and file-count amplification, visible in "
                          "materialization wall_sec")}
     if out_path:
         out_path.write_text(json.dumps(artifact, indent=1) + "\n")
         print(f"wrote {out_path}")
+    tracer.close()
     spark.stop()
     return 0
 

@@ -1,12 +1,14 @@
 #!/usr/bin/env python
-"""Per-stage profile of named queries: wall, task count, per-stage executor
-time, shuffle bytes/records, input bytes — the SQL-tab view, scripted.
+"""Per-query profile through the bench's own instrument: for each named
+query, the record bench.py writes to its sidecar (the steady run's construct
+and execution jobs, stages, exchanges, shuffle records and input bytes) as
+one JSON line, then one row per stage of that steady run.
 
 Usage: python scripts/profile_query.py <query> [query ...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
-Each query is warmed at sf0.001+sf0.01 (codegen/JIT off the clock), then run
-N times (SPARK_GRAFT_PROFILE_RUNS, default 3); the stage table reports the
-LAST run so metrics map 1:1 to one execution.
+Each query is warmed like in bench.py (same warm-up dirs), then run twice;
+the second run is traced. Its stages are found through the traced
+spans' job ids, so each row belongs to that one execution.
 """
 
 from __future__ import annotations
@@ -14,77 +16,51 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 import urllib.request
 from pathlib import Path
 
 _ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(_ROOT))
 
-from polars_ad_etl_spark.operators import QUERIES  # noqa: E402
-from polars_ad_etl_spark.session import get_spark  # noqa: E402
+import bench  # noqa: E402
+
+
+def _stage_rows(spark, spans):
+    """(span, job, completed stage attempt) for every job of the spans."""
+    sc = spark.sparkContext
+    rest = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/stages"
+    tracker = sc.statusTracker()
+    for s in sorted(spans, key=lambda s: s.start):
+        for j in sorted(s.jobs):
+            for sid in sorted(tracker.getJobInfo(j).stageIds):
+                with urllib.request.urlopen(f"{rest}/{sid}", timeout=10) as r:
+                    for a in json.loads(r.read()):
+                        if a["status"] == "COMPLETE":
+                            yield s.name, j, a
 
 
 def main() -> int:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    runs = int(os.environ.get("SPARK_GRAFT_PROFILE_RUNS", "3"))
-    spark = get_spark(
-        "profile-query", extra_conf={"spark.ui.enabled": "true",
-                                     "spark.ui.port": "0"}
-    )
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{ui}/api/v1/applications/{app}/stages?status=complete"
-
-    def stages():
-        with urllib.request.urlopen(url, timeout=10) as r:
-            return json.loads(r.read())
-
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    spark, tracer = bench.bench_session()
+    bench.warm_up(spark, names)
     for name in names:
-        for d in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
-            QUERIES[name](spark, d).count()
-        walls = []
-        for i in range(runs):
-            before = {s["stageId"] for s in stages()}
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).count()
-            walls.append(time.perf_counter() - t0)
-        new = sorted(
-            (s for s in stages() if s["stageId"] not in before),
-            key=lambda s: s["stageId"],
-        )
-        print(f"\n=== {name}: walls {[round(w, 3) for w in walls]} "
-              f"(last run's stages below)")
-        print(f"{'stage':>6} {'ms':>7} {'tasks':>5} {'exec_ms':>8} "
-              f"{'cpu_ms':>8} {'in_MB':>7} {'sh_rd_MB':>8} {'sh_wr_MB':>8} "
-              f"{'sh_wrec':>8}  name")
-        for s in new:
-            dur = s.get("executorRunTime", 0)
-            cpu = s.get("executorCpuTime", 0) // 1_000_000
-            first = s.get("firstTaskLaunchedTime", "")
-            comp = s.get("completionTime", "")
-            wall_ms = ""
-            try:
-                from datetime import datetime
-
-                fmt = "%Y-%m-%dT%H:%M:%S.%f%Z"
-                wall_ms = int(
-                    (datetime.strptime(comp, fmt)
-                     - datetime.strptime(first, fmt)).total_seconds() * 1000
-                )
-            except Exception:
-                pass
+        wall, rec = bench.timed_query(spark, tracer, name, sf_dir)
+        print(json.dumps({"query": name, "wall": round(wall, 3), **rec}))
+        print(f"{'span':<20} {'job':>4} {'stage':>5} {'tasks':>5} "
+              f"{'exec_ms':>8} {'cpu_ms':>7} {'in_MB':>7} {'sh_rd_MB':>8} "
+              f"{'sh_wr_MB':>8} {'sh_wrec':>8}  name")
+        for span, job, a in _stage_rows(spark, tracer.op_spans[name]):
             print(
-                f"{s['stageId']:>6} {wall_ms!s:>7} {s['numCompleteTasks']:>5} "
-                f"{dur:>8} {cpu:>8} "
-                f"{s.get('inputBytes', 0) / 1e6:>7.2f} "
-                f"{s.get('shuffleReadBytes', 0) / 1e6:>8.3f} "
-                f"{s.get('shuffleWriteBytes', 0) / 1e6:>8.3f} "
-                f"{s.get('shuffleWriteRecords', 0):>8}  "
-                f"{s.get('name', '')[:60]}"
+                f"{span:<20} {job:>4} {a['stageId']:>5} "
+                f"{a['numCompleteTasks']:>5} {a['executorRunTime']:>8} "
+                f"{a['executorCpuTime'] // 1_000_000:>7} "
+                f"{a['inputBytes'] / 1e6:>7.2f} "
+                f"{a['shuffleReadBytes'] / 1e6:>8.3f} "
+                f"{a['shuffleWriteBytes'] / 1e6:>8.3f} "
+                f"{a['shuffleWriteRecords']:>8}  {a['name'][:60]}"
             )
+    tracer.close()
     return 0
 
 

@@ -2,7 +2,7 @@
 """Scale-stress sweep: run the bench headline set PLUS the full dedup/ANN
 family at several scale factors, recording per-query wall time AND
 per-query shuffle read/write, input, spill, and peak execution memory
-(attributed via bench._StageMetrics / the public monitoring REST API).
+(attributed via _StageMetrics / the public monitoring REST API).
 
 The point is evidence, not timing folklore: for each query the output
 carries the wall and shuffle-byte ratios between the largest and smallest
@@ -25,17 +25,87 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from bench import HEADLINE, _StageMetrics  # noqa: E402
+from bench import HEADLINE  # noqa: E402
 from polars_ad_etl_spark.operators import QUERIES  # noqa: E402
 from polars_ad_etl_spark.session import get_spark  # noqa: E402
 
 FAMILY = sorted(n for n in QUERIES if n.startswith(("dedup_", "sim_")))
 
+
+class _StageMetrics:
+    """Per-query executor metrics via Spark's public monitoring REST API.
+
+    Between ``snapshot()`` and ``delta()`` every *newly completed* stage
+    (stage id above the snapshot's max) is attributed to the current query,
+    and its shuffle read/write, input, spill, and peak execution memory are
+    summed. Shuffle BYTES are what this sweep's byte-based verdict reads,
+    and perfbench's Tracer leaves them out (they differ between runs), so
+    this helper stays private to the sweep. Fail-soft: any REST hiccup
+    turns metrics off for the run rather than failing the sweep."""
+
+    def __init__(self, spark) -> None:
+        self.ok = True
+        self._url = None
+        try:
+            ui = spark.sparkContext.uiWebUrl
+            app = spark.sparkContext.applicationId
+            if ui:
+                self._url = f"{ui}/api/v1/applications/{app}/stages?status=complete"
+        except Exception:
+            pass
+        if not self._url:
+            self.ok = False
+        self._max_seen = -1
+
+    def _stages(self):
+        import urllib.request
+
+        with urllib.request.urlopen(self._url, timeout=10) as r:
+            return json.loads(r.read())
+
+    def snapshot(self) -> None:
+        if not self.ok:
+            return
+        try:
+            ids = [s["stageId"] for s in self._stages()]
+            self._max_seen = max(ids) if ids else self._max_seen
+        except Exception:
+            self.ok = False
+
+    def delta(self) -> dict | None:
+        if not self.ok:
+            return None
+        try:
+            new = [s for s in self._stages() if s["stageId"] > self._max_seen]
+            out = {
+                "shuffle_read_bytes": sum(s.get("shuffleReadBytes", 0) for s in new),
+                "shuffle_write_bytes": sum(s.get("shuffleWriteBytes", 0) for s in new),
+                # records are the compression-independent movement measure:
+                # the scale sweep arbitrates byte-ratio flags on them
+                # (bytes can drift with encoding entropy across SFs).
+                "shuffle_write_records": sum(
+                    s.get("shuffleWriteRecords", 0) for s in new
+                ),
+                "input_bytes": sum(s.get("inputBytes", 0) for s in new),
+                "spill_bytes": sum(
+                    s.get("memoryBytesSpilled", 0) + s.get("diskBytesSpilled", 0)
+                    for s in new
+                ),
+                "peak_execution_memory": max(
+                    (s.get("peakExecutionMemory", 0) for s in new), default=0
+                ),
+            }
+            if new:
+                self._max_seen = max(s["stageId"] for s in new)
+            return out
+        except Exception:
+            self.ok = False
+            return None
+
 # --- Scaling classification (round-10: retime/byte arbitration) ------------
 # Round 9's sweep recorded `superlinear_count: 2` for two sub-second
 # queries whose shuffles are ~2 KB and whose bytes scale linearly — wall
-# noise recorded as a scale signal. Port the bench flag-stack's arbitration
-# (bench.py::decide_flag rationale): bytes are the load-immune evidence,
+# noise recorded as a scale signal. Bytes are the load-immune evidence,
 # walls need a surviving retime. The decision is a pure function so
 # tests/test_bench_flags.py can pin it.
 _BYTE_FLOOR = 65536  # bytes; sub-64KiB shuffles are scheduler/AQE jitter
@@ -243,7 +313,7 @@ def main() -> None:
         for name in names:
             QUERIES[name](spark, d).count()
 
-    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
+    runs = 2  # best-of-2 wall per query and scale, like bench.py
     metrics_src = _StageMetrics(spark)
     result: dict = {"sfs": [sf for _, sf in sfs], "runs": runs, "queries": {}}
     for name in names:

@@ -31,6 +31,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from perfbench.tracing import Span, Tracer  # noqa: E402
 from polars_ad_etl_spark.session import get_spark  # noqa: E402
 from polars_ad_etl_spark.sources.star import load_events  # noqa: E402
 from polars_ad_etl_spark.streaming.events import (  # noqa: E402
@@ -207,6 +208,16 @@ def run_ingest_bench(spark, sf_dir: str, n_files: int, bounded: bool) -> dict:
     }
 
 
+def _stream_input_bytes(tracer, query) -> int:
+    """Input bytes of every job a streaming query ran. The query runs its
+    micro-batches, foreachBatch bodies included, under its own job group
+    (its run id), so the tracer collects that group as one span."""
+    span = Span("stream", None)
+    span.group = str(query.runId)
+    tracer._collect([span])
+    return int(span.figures["input_bytes"])
+
+
 def _run_foreach_decisions(
     spark,
     table: str,
@@ -217,7 +228,7 @@ def _run_foreach_decisions(
     n_files: int,
     files_per_trigger: int,
     static_side: str,
-    metrics=None,
+    tracer=None,
 ) -> dict:
     """Shared driver for both labeled foreachBatch admission benches. No
     heap-vs-RocksDB axis on purpose: these pipelines' cross-batch state is
@@ -229,7 +240,7 @@ def _run_foreach_decisions(
     rows/s near-linear in batch size, or the pipeline cannot keep up at
     100 TB by batching alone), ``static_side`` selects the derived
     (corpus-rescanning) vs persisted (compaction-maintained parquet)
-    corpus indexes, and ``metrics`` (bench._StageMetrics) attributes total
+    corpus indexes, and ``tracer`` (perfbench's Tracer) attributes total
     INPUT BYTES to the run — the static side is re-evaluated every
     trigger, so input_bytes_per_trigger is the direct measure of what the
     persisted indexes save."""
@@ -252,8 +263,6 @@ def _run_foreach_decisions(
     )
     stream = reader(spark, work, max_files_per_trigger=files_per_trigger)
     out = tempfile.mkdtemp(prefix=f"{table}_decisions_out_")
-    if metrics is not None:
-        metrics.snapshot()
     t0 = time.perf_counter()
     q = pipeline(
         stream, *indexes,
@@ -264,7 +273,7 @@ def _run_foreach_decisions(
     q.processAllAvailable()
     q.stop()
     wall = time.perf_counter() - t0
-    m = metrics.delta() if metrics is not None else None
+    in_bytes = _stream_input_bytes(tracer, q) if tracer is not None else None
     batches = [
         {"rows": p["numInputRows"],
          "ms": p["durationMs"].get("triggerExecution", 0)}
@@ -287,14 +296,15 @@ def _run_foreach_decisions(
         "n_batches": n_batches,
         "rows_per_sec": round(total_rows / wall, 1) if wall else None,
         "batch_ms_p50": statistics.median(ms),
-        "input_bytes_total": m["input_bytes"] if m else None,
+        "input_bytes_total": in_bytes,
         "input_bytes_per_trigger": (
-            round(m["input_bytes"] / n_batches) if m and n_batches else None
+            round(in_bytes / n_batches)
+            if in_bytes is not None and n_batches else None
         ),
         "stream_source_bytes": stream_bytes,
         "static_bytes_per_trigger": (
-            round(max(m["input_bytes"] - stream_bytes, 0) / n_batches)
-            if m and n_batches
+            round(max(in_bytes - stream_bytes, 0) / n_batches)
+            if in_bytes is not None and n_batches
             else None
         ),
     }
@@ -302,7 +312,7 @@ def _run_foreach_decisions(
 
 def run_decisions_bench(
     spark, sf_dir: str, n_files: int,
-    files_per_trigger: int = 2, persisted: bool = True, metrics=None,
+    files_per_trigger: int = 2, persisted: bool = True, tracer=None,
 ) -> dict:
     """Document admission decisions
     (streaming/documents.py::incremental_ingest_decisions). Persisted
@@ -321,13 +331,13 @@ def run_decisions_bench(
         spark, "documents", read_documents_stream,
         incremental_ingest_decisions, idx_fn(spark, sf_dir),
         sf_dir, n_files, files_per_trigger,
-        "persisted" if persisted else "derived", metrics,
+        "persisted" if persisted else "derived", tracer,
     )
 
 
 def run_embedding_decisions_bench(
     spark, sf_dir: str, n_files: int,
-    files_per_trigger: int = 2, persisted: bool = True, metrics=None,
+    files_per_trigger: int = 2, persisted: bool = True, tracer=None,
 ) -> dict:
     """Vector admission decisions
     (streaming/embeddings.py::embedding_ingest_decisions) — same axes as
@@ -346,7 +356,7 @@ def run_embedding_decisions_bench(
         spark, "embeddings", read_embeddings_stream,
         embedding_ingest_decisions, idx_fn(spark, sf_dir),
         sf_dir, n_files, files_per_trigger,
-        "persisted" if persisted else "derived", metrics,
+        "persisted" if persisted else "derived", tracer,
     )
     r["variant"] = "embedding_decisions"
     return r
@@ -522,12 +532,9 @@ def main() -> None:
     # before the JVM starts: workers inherit PYTHONPATH now (the stress
     # subprocesses re-resolve protobuf themselves in _stress_cli)
     ensure_protobuf()
-    # UI on: bench._StageMetrics attributes input bytes via the monitoring
-    # REST API (the static-side-rescan evidence for the decisions grid)
-    spark = get_spark(
-        "streaming-bench",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "0"},
-    )
+    # UI on: the tracer attributes input bytes via the monitoring REST API
+    # (the static-side-rescan evidence for the decisions grid)
+    spark = get_spark("streaming-bench", extra_conf=Tracer.SPARK_CONF)
     src = prepare_source(spark, sf_dir, n_files)
     # JIT warmup on a tiny slice: one throwaway run per pipeline shape
     warm = prepare_source(spark, "/root/testdata/sf0.001", 2)
@@ -562,9 +569,8 @@ def main() -> None:
     # per-trigger overhead amortizes), and ONE derived-index comparison
     # row at the base size quantifying the static-side rescans the
     # persisted indexes eliminate (input_bytes_per_trigger).
-    from bench import _StageMetrics
-
-    metrics = _StageMetrics(spark)
+    tracer = Tracer()
+    tracer.attach(spark)
     for fn, base_key in (
         (run_decisions_bench, "ingest_decisions"),
         (run_embedding_decisions_bench, "ingest_embedding_decisions"),
@@ -578,7 +584,7 @@ def main() -> None:
             r = fn(
                 spark, sf_dir, n_files,
                 files_per_trigger=fpt * fpt_mult, persisted=persisted,
-                metrics=metrics,
+                tracer=tracer,
             )
             result[key] = r
             print(
@@ -588,6 +594,7 @@ def main() -> None:
                 f"{r['input_bytes_per_trigger']} input B/trigger",
                 flush=True,
             )
+    tracer.close()
     spark.stop()
     # Rate-source stresses (state-store rows/s ceiling with zero source
     # cost), each in its OWN subprocess/JVM via --stress — see _stress_cli

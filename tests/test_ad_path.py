@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from polars_ad_etl_spark.pipelines import apsl, export_daily, like_eat
 from polars_ad_etl_spark.plans import MultiSourceAdETL, PipelineConfig
+from polars_ad_etl_spark.plans.pipeline import SourceDetectionError
 from polars_ad_etl_spark.plans.schema import Date, Float64, Int64, String
 from polars_ad_etl_spark.sources.tabular import (
     EmptyDirectoryError,
@@ -100,6 +101,12 @@ def test_empty_dir_raises_on_both_read_paths(spark, tmp_path):
         read_tabular_dir(spark, tmp_path)
     with pytest.raises(EmptyDirectoryError):
         read_csv_dir_grouped(spark, tmp_path, lambda cols: "S")
+    # a 0-byte CSV has no columns, so neither path can detect its source
+    (tmp_path / "empty.csv").write_bytes(b"")
+    for read in ("read_tabular_files", "read_tabular_files_grouped"):
+        etl = MultiSourceAdETL(spark, apsl.config())
+        with pytest.raises(SourceDetectionError, match=r"columns \[\]"):
+            getattr(etl, read)(tmp_path).assign_source()
 
 
 # ------------------------------------------------------------- standardize

@@ -1,369 +1,115 @@
-"""Pin the bench budget-flag decision (bench.py::decide_flag).
+"""Pin bench.py's count gate and the scale sweep's scaling verdict.
 
-Round-8 post-mortem: two-sided regime normalization false-flagged 33/37
-queries in a loaded driver run (throughput probe fast under load -> factor
-0.79 -> every wall AMPLIFIED), while the disproof — byte-identical
-shuffle/input metrics — sat unused in the same sidecar. These tests pin the
-round-9 contract: (a) a fast-probe factor never amplifies, (b) a uniformly
-slow regime absorbs uniform wall inflation, (c) a plan change (byte growth)
-flags regardless of wall, (d) a genuine idle-host wall regression still
-flags. No SparkSession needed — decide_flag is a pure function.
+bench.py flags a query when any of its exact steady-run counts (construct
+jobs, execution jobs, stages, exchanges, shuffle records, input bytes) grows
+past bench_budgets.json; a count below budget is an improvement. The gate
+and the budget update are pure functions, pinned here without a
+SparkSession; one subprocess smoke test runs the instrument end to end
+through scripts/profile_query.py.
 """
 
 from __future__ import annotations
 
 import importlib.util
+import json
+import os
+import subprocess
 import sys
 from pathlib import Path
 
-_BENCH = Path(__file__).resolve().parents[1] / "bench.py"
-_spec = importlib.util.spec_from_file_location("bench_module", _BENCH)
+import pytest
+
+from test_incremental_join import SF_DIR
+
+_REPO = Path(__file__).resolve().parents[1]
+_spec = importlib.util.spec_from_file_location("bench_module", _REPO / "bench.py")
 bench = importlib.util.module_from_spec(_spec)
 sys.modules.setdefault("bench_module", bench)
 _spec.loader.exec_module(bench)
 
-decide_flag = bench.decide_flag
-demote_uniform_wall_flags = bench.demote_uniform_wall_flags
-
-_M = {"shuffle_read_bytes": 1_000_000, "input_bytes": 50_000_000}
-
-
-def test_loaded_host_fast_probe_never_amplifies():
-    # The round-8 failure mode: latency up ~1.35x under load, probe factor
-    # 0.79 (throughput regime FAST). One-sided divisor = max(0.79, 1) = 1,
-    # raw ratio 1.35 < 1.5 threshold, bytes identical -> no flag.
-    assert decide_flag(1.35, 1.0, 0.79, _M, dict(_M)) is None
-
-
-def test_slow_regime_absorbs_uniform_inflation():
-    # Genuinely slow regime (factor 2.0): raw wall 2.6x budget normalizes
-    # to 1.3x -> under threshold, bytes identical -> no flag.
-    assert decide_flag(2.6, 1.0, 2.0, _M, dict(_M)) is None
-
-
-def test_idle_host_wall_regression_still_flags():
-    rec = decide_flag(2.0, 1.0, 1.0, _M, dict(_M))
-    assert rec is not None and rec["reasons"] == ["wall"]
-    assert rec["ratio_normalized"] == 2.0
-
-
-def test_fast_probe_does_not_suppress_real_regression():
-    # One-sided also means a fast factor can't DIVIDE a real regression
-    # away: divisor is clamped at 1, so raw 1.6x stays 1.6x.
-    rec = decide_flag(1.6, 1.0, 0.5, _M, dict(_M))
-    assert rec is not None and "wall" in rec["reasons"]
-
-
-def test_planted_plan_change_flags_on_bytes_even_with_fast_wall():
-    # Disabled broadcast: shuffle read grows 40x while the wall happens to
-    # be under budget (small SF) -> flag on bytes alone.
-    now = {"shuffle_read_bytes": 40_000_000, "input_bytes": 50_000_000}
-    rec = decide_flag(0.5, 1.0, 1.0, now, dict(_M))
-    assert rec is not None and rec["reasons"] == ["shuffle_read_bytes"]
-    assert rec["shuffle_read_bytes_budget"] == 1_000_000
-
-
-def test_byte_decrease_is_an_improvement_not_a_flag():
-    now = {"shuffle_read_bytes": 10, "input_bytes": 1_000}
-    assert decide_flag(0.5, 1.0, 1.0, now, dict(_M)) is None
-
-
-def test_small_absolute_jitter_below_floor_never_flags():
-    # 59 B -> 30 KiB is a huge ratio but below the 64 KiB absolute floor:
-    # sub-64KiB movements are AQE/compression jitter, not plan changes.
-    now = {"shuffle_read_bytes": 30_000, "input_bytes": 50_000_000}
-    bud = {"shuffle_read_bytes": 59, "input_bytes": 50_000_000}
-    assert decide_flag(0.5, 1.0, 1.0, now, bud) is None
-
-
-def test_missing_byte_budget_degrades_to_wall_only():
-    assert decide_flag(1.2, 1.0, 1.0, _M, None) is None
-    rec = decide_flag(2.0, 1.0, 1.0, _M, None)
-    assert rec is not None and rec["reasons"] == ["wall"]
-
-
-def test_loaded_host_wall_with_identical_bytes_is_suspect_not_flag():
-    # The residual round-8 failure mode past the one-sided clamp: a heavy
-    # concurrent load inflates one query's wall >1.5x while the throughput
-    # probe under-measures the latency hit. Bytes identical + host not
-    # idle -> demoted to wall_suspect (informational); the next idle run
-    # re-arbitrates.
-    rec = decide_flag(2.5, 1.0, 1.3, _M, dict(_M), idle=False)
-    assert rec is not None and rec["reasons"] == ["wall_suspect"]
-
-
-def test_idle_host_wall_stays_authoritative_even_with_identical_bytes():
-    # A UDF regression moves no bytes; on an idle host the wall flag must
-    # not be suppressed by the byte comparison.
-    rec = decide_flag(2.0, 1.0, 1.0, _M, dict(_M), idle=True)
-    assert rec is not None and rec["reasons"] == ["wall"]
-
-
-def test_loaded_host_wall_without_byte_budget_stays_authoritative():
-    # Nothing to disprove it with -> keep the flag (degraded mode).
-    rec = decide_flag(2.5, 1.0, 1.3, _M, None, idle=False)
-    assert rec is not None and rec["reasons"] == ["wall"]
-
-
-def test_loaded_host_byte_growth_plus_wall_flags_both():
-    now = {"shuffle_read_bytes": 40_000_000, "input_bytes": 50_000_000}
-    rec = decide_flag(2.5, 1.0, 1.3, now, dict(_M), idle=False)
-    assert rec is not None
-    assert set(rec["reasons"]) == {"shuffle_read_bytes", "wall"}
-
-
-def _wall_flag(ratio=2.0, bytes_identical=True):
-    return {"reasons": ["wall"], "bytes_identical": bytes_identical,
-            "ratio_normalized": ratio}
-
-
-def test_uniform_wall_inflation_demotes_to_regime_suspect():
-    # Measured round-9 failure mode: 24/37 walls over budget on an "idle"
-    # host with probe factor 1.04 and byte-identical metrics everywhere —
-    # a latency regime the throughput probe can't see. Fleet-level rule:
-    # that many simultaneous byte-identical wall flags = regime, demote.
-    flags = {f"q{i}": _wall_flag() for i in range(24)}
-    auth, demoted = demote_uniform_wall_flags(flags, n_checked=37)
-    assert auth == {} and len(demoted) == 24
-    assert all(r["reasons"] == ["wall_regime_suspect"] for r in demoted.values())
-
-
-def test_targeted_wall_regression_stays_authoritative():
-    flags = {"q1": _wall_flag(), "q2": _wall_flag()}
-    auth, demoted = demote_uniform_wall_flags(flags, n_checked=37)
-    assert set(auth) == {"q1", "q2"} and demoted == {}
-
-
-def test_byte_moving_flags_never_demote():
-    flags = {f"q{i}": _wall_flag() for i in range(10)}
-    flags["plan_change"] = {
-        "reasons": ["shuffle_read_bytes", "wall"], "bytes_identical": False,
-    }
-    flags["no_bytes_info"] = {"reasons": ["wall"], "bytes_identical": False}
-    auth, demoted = demote_uniform_wall_flags(flags, n_checked=37)
-    assert "plan_change" in auth and "no_bytes_info" in auth
-    assert len(demoted) == 10
-
-
-def test_missing_wall_budget_still_byte_checks():
-    now = {"shuffle_read_bytes": 40_000_000, "input_bytes": 50_000_000}
-    rec = decide_flag(0.5, None, 1.0, now, dict(_M))
-    assert rec is not None and rec["reasons"] == ["shuffle_read_bytes"]
-
-
-def test_subfloor_idle_wall_with_identical_bytes_demotes():
-    # Round-9 residual mode, now pinned: ratchet-minimum budgets on
-    # fixed-cost sub-half-second queries sit inside idle-host jitter
-    # (both round-9 flags — 0.46s/0.35s walls, byte-identical 59 B
-    # shuffles — were A/B-arbitrated to host variance). Raw wall under
-    # the 0.5s floor + identical bytes + idle -> informational.
-    rec = decide_flag(0.46, 0.29, 1.0, _M, dict(_M), idle=True)
-    assert rec is not None
-    assert rec["reasons"] == ["wall_smallfloor_suspect"]
-
-
-def test_at_floor_idle_wall_stays_authoritative():
-    # The floor is strict: a 0.5s+ raw wall is past fixed-cost jitter
-    # territory and keeps the authoritative flag.
-    rec = decide_flag(0.6, 0.3, 1.0, _M, dict(_M), idle=True)
-    assert rec is not None and rec["reasons"] == ["wall"]
-
-
-def test_subfloor_byte_growth_still_flags():
-    # The floor only softens wall-only evidence; a sub-floor query whose
-    # bytes grew is a plan change and flags regardless of wall size.
-    now = {"shuffle_read_bytes": 40_000_000, "input_bytes": 50_000_000}
-    rec = decide_flag(0.3, 0.1, 1.0, now, dict(_M), idle=True)
-    assert rec is not None
-    assert "shuffle_read_bytes" in rec["reasons"]
-    assert "wall" in rec["reasons"]
-
-
-def test_subfloor_without_byte_budget_stays_authoritative():
-    # No byte evidence to disprove the wall with -> degraded mode keeps
-    # the flag even under the floor.
-    rec = decide_flag(0.4, 0.2, 1.0, _M, None, idle=True)
-    assert rec is not None and rec["reasons"] == ["wall"]
-
-
-arbitrate_wall_flags_by_retime = bench.arbitrate_wall_flags_by_retime
-
-
-def _wall_rec(budget=1.0):
-    return {"reasons": ["wall"], "bytes_identical": True, "budget": budget,
-            "sec": 2.0}
-
-
-def test_retime_under_budget_clears_the_flag():
-    # The measured mode: two idle runs minutes apart, 20.2s vs 28.7s on
-    # identical code — a fresh end-of-run measurement under budget proves
-    # the plan still holds and demotes the wall flag.
-    flags = {"q": _wall_rec(budget=1.0)}
-    auth, cleared = arbitrate_wall_flags_by_retime(
-        flags, lambda n: 0.9, threshold=1.5)
-    assert auth == {} and list(cleared) == ["q"]
-    assert cleared["q"]["reasons"] == ["wall_retime_cleared"]
-    assert cleared["q"]["retime_sec"] == 0.9
-
-
-def test_retime_still_over_budget_stays_authoritative():
-    # A genuine regression reproduces in every minute: the flag stands,
-    # with the confirming retime recorded.
-    flags = {"q": _wall_rec(budget=1.0)}
-    auth, cleared = arbitrate_wall_flags_by_retime(
-        flags, lambda n: 1.8, threshold=1.5)
-    assert list(auth) == ["q"] and cleared == {}
-    assert auth["q"]["reasons"] == ["wall"]
-    assert auth["q"]["retime_sec"] == 1.8
-
-
-def test_retime_never_touches_byte_moving_flags():
-    # Bytes are load-immune evidence; a plan change must not be retimed
-    # away even by a fast minute.
-    flags = {"q": {"reasons": ["shuffle_read_bytes", "wall"],
-                   "bytes_identical": False, "budget": 1.0}}
-    calls = []
-    auth, cleared = arbitrate_wall_flags_by_retime(
-        flags, lambda n: calls.append(n) or 0.1)
-    assert list(auth) == ["q"] and cleared == {} and calls == []
-
-
-def test_retime_cap_bounds_the_extra_wall_cost():
-    flags = {f"q{i}": _wall_rec() for i in range(12)}
-    calls = []
-    auth, cleared = arbitrate_wall_flags_by_retime(
-        flags, lambda n: calls.append(n) or 0.5, max_retimes=8)
-    assert len(calls) == 8 and len(cleared) == 8 and len(auth) == 4
-
-
-def test_retime_between_budget_and_threshold_is_borderline():
-    # Round-10 split: a retime that lands in (budget, threshold*budget] is
-    # neither a disproof (not under budget) nor a confirmation (the
-    # over-threshold wall did not reproduce). It demotes out of the
-    # authoritative set but keeps a distinct label so a recurring
-    # borderline is visible run-over-run instead of vanishing into
-    # "cleared".
-    flags = {"q": _wall_rec(budget=1.0)}
-    auth, demoted = arbitrate_wall_flags_by_retime(
-        flags, lambda n: 1.3, threshold=1.5)
-    assert auth == {} and list(demoted) == ["q"]
-    assert demoted["q"]["reasons"] == ["wall_retime_borderline"]
-    assert demoted["q"]["retime_sec"] == 1.3
-
-
-def test_subfloor_gross_regression_stays_authoritative():
-    # Round-10 escape hatch for the floor's documented blind spot: a
-    # byte-neutral compute regression on a fixed-cost query (0.1s budget
-    # -> 0.45s wall = 4.5x) is outside every observed jitter regime and
-    # must flag even though the raw wall sits under the 0.5s floor.
-    rec = decide_flag(0.45, 0.1, 1.0, _M, dict(_M), idle=True)
-    assert rec is not None and rec["reasons"] == ["wall"]
-
-
-def test_subfloor_under_gross_ratio_still_demotes():
-    # ...while the ordinary jitter band (<3x) keeps the floor demotion.
-    rec = decide_flag(0.45, 0.2, 1.0, _M, dict(_M), idle=True)
-    assert rec is not None
-    assert rec["reasons"] == ["wall_smallfloor_suspect"]
-
-
-# ------------------------------------- zero-shuffle wall auto-arbitration
-# Round-11 (verdict task 5): the r10 flag — dedup_minhash_signatures,
-# 0.657s vs 0.427s budget, 0-byte shuffle, plan pinned, manually retimed to
-# host regime — is now arbitrated by rule: budgeted shuffle under the byte
-# jitter floor + bytes identical + idle demotes the wall regardless of the
-# absolute floor, keeping the gross escape hatch and byte policing.
-
-_ZS = {"shuffle_read_bytes": 0, "input_bytes": 5_000_000}
-
-
-def test_zeroshuffle_overfloor_wall_demotes():
-    # the exact r10 flag shape: 0.657s raw (over the 0.5s floor), 1.54x
-    # budget, zero-shuffle budget, bytes identical, idle
-    rec = decide_flag(0.657, 0.427, 1.0, dict(_ZS), dict(_ZS), idle=True)
-    assert rec is not None
-    assert rec["reasons"] == ["wall_zeroshuffle_suspect"]
-
-
-def test_zeroshuffle_gross_regression_stays_authoritative():
-    rec = decide_flag(1.5, 0.427, 1.0, dict(_ZS), dict(_ZS), idle=True)
-    assert rec is not None and rec["reasons"] == ["wall"]
-
-
-def test_zeroshuffle_input_byte_growth_still_flags():
-    # zero-shuffle queries are still policed for plan changes through
-    # their input-bytes budget (lost pushdown/pruning reads more)
-    now = {"shuffle_read_bytes": 0, "input_bytes": 20_000_000}
-    rec = decide_flag(0.657, 0.427, 1.0, now, dict(_ZS), idle=True)
-    assert rec is not None
-    assert "input_bytes" in rec["reasons"] and "wall" in rec["reasons"]
-
-
-def test_zeroshuffle_class_is_budget_keyed_not_measurement_keyed():
-    # the class membership comes from the BUDGET (the recorded plan), not
-    # the current run: a query that newly grew a real shuffle cannot
-    # self-demote by having had one in this run only
-    now = {"shuffle_read_bytes": 10_000_000, "input_bytes": 5_000_000}
-    rec = decide_flag(0.657, 0.427, 1.0, now, dict(_ZS), idle=True)
-    assert rec is not None
-    assert "shuffle_read_bytes" in rec["reasons"]  # byte growth flags
-    assert "wall_zeroshuffle_suspect" not in rec["reasons"]
-
-
-# ---------------------------------------------- epoch budget re-basing
-update_budgets = bench.update_budgets
-
-_MET = {"q": {"shuffle_read_bytes": 100, "input_bytes": 200, "n_stages": 3}}
-
-
-def test_update_budgets_first_run_starts_epoch_one():
-    bud = {"sf": 0.1, "budgets": {"q": 0.5}}  # legacy ratchet-minimum file
-    assert update_budgets(bud, {"q": 1.2}, _MET, 1.0, idle=True)
-    assert bud["epoch"] == 1
-    # legacy golden-minute budget replaced by the fresh sample, not kept
-    assert bud["budgets"]["q"] == 1.2
-    assert bud["wall_samples"]["q"] == [1.2]
-    assert bud["byte_budgets"]["q"]["shuffle_read_bytes"] == 100
-
-
-def test_update_budgets_median_not_minimum():
-    # The round-9 root cause: ratchet minima converge on golden minutes.
-    # The epoch budget is the lower median of recent idle samples, so one
-    # lucky 0.8s minute among typical 1.2s runs does NOT become the bar.
-    bud = {"sf": 0.1, "budgets": {}, "epoch": 1,
-           "wall_samples": {"q": [1.2, 0.8, 1.3]}}
-    update_budgets(bud, {"q": 1.25}, {}, 1.0, idle=True)
-    assert bud["wall_samples"]["q"] == [1.2, 0.8, 1.3, 1.25]
-    assert bud["budgets"]["q"] == 1.2  # lower median of 4 samples
-
-
-def test_update_budgets_sample_window_is_bounded():
-    bud = {"sf": 0.1, "budgets": {}, "epoch": 1,
-           "wall_samples": {"q": [1.0, 2.0, 3.0, 4.0, 5.0]}}
-    update_budgets(bud, {"q": 6.0}, {}, 1.0, idle=True)
-    assert bud["wall_samples"]["q"] == [2.0, 3.0, 4.0, 5.0, 6.0]
-    assert bud["budgets"]["q"] == 4.0
-
-
-def test_update_budgets_busy_host_cannot_loosen_the_bar():
-    bud = {"sf": 0.1, "budgets": {"q": 1.0}, "epoch": 1,
-           "wall_samples": {"q": [1.0]}}
-    assert not update_budgets(bud, {"q": 9.0}, {}, 1.0, idle=False)
-    assert bud["budgets"]["q"] == 1.0 and bud["wall_samples"]["q"] == [1.0]
-
-
-def test_update_budgets_rebase_resets_history_and_bumps_epoch():
-    bud = {"sf": 0.1, "budgets": {"q": 1.0}, "epoch": 3,
-           "wall_samples": {"q": [1.0, 1.1]}}
-    update_budgets(bud, {"q": 2.0}, {}, 1.0, idle=True, rebase=True)
-    assert bud["epoch"] == 4
-    assert bud["wall_samples"]["q"] == [2.0] and bud["budgets"]["q"] == 2.0
-
-
-def test_update_budgets_normalizes_by_divisor():
-    bud = {"sf": 0.1, "budgets": {}, "epoch": 1, "wall_samples": {}}
-    update_budgets(bud, {"q": 2.0}, {}, 2.0, idle=True)
-    assert bud["wall_samples"]["q"] == [1.0]
+_REC = {"construct_jobs": 0, "exec_jobs": 7, "stages": 7, "exchanges": 6,
+        "shuffle_records": 5, "input_bytes": 200_000}
+
+
+def _budgets(**counts):
+    return bench.recorded_counts(0.1, 4, {"q": dict(_REC), **counts})
+
+
+@pytest.mark.parametrize("key", bench.COUNTS)
+def test_growth_in_any_count_flags(key):
+    grown = {**_REC, key: _REC[key] + 1}
+    out = bench.check_counts(_budgets(), 0.1, 4, {"q": grown})
+    assert out["comparable"] and out["n_flagged"] == 1
+    assert out["flagged"] == {"q": {key: [_REC[key], _REC[key] + 1]}}
+    assert out["improved"] == {}
+
+
+def test_decrease_is_an_improvement_not_a_flag():
+    fewer = {**_REC, "exec_jobs": 6, "input_bytes": 150_000}
+    out = bench.check_counts(_budgets(), 0.1, 4, {"q": fewer})
+    assert out["n_flagged"] == 0 and out["flagged"] == {}
+    assert out["improved"] == {"q": {"exec_jobs": [7, 6],
+                                     "input_bytes": [200_000, 150_000]}}
+
+
+def test_equal_counts_pass_and_unbudgeted_queries_are_listed():
+    out = bench.check_counts(_budgets(), 0.1, 4, {"q": dict(_REC), "new": dict(_REC)})
+    assert out["comparable"] and out["n_checked"] == 1
+    assert out["n_flagged"] == 0 and out["n_improved"] == 0
+    assert out["unbudgeted"] == ["new"]
+
+
+@pytest.mark.parametrize("sf,cpus", [(1.0, 4), (0.1, 8)])
+def test_sf_or_cpus_mismatch_is_not_comparable(sf, cpus):
+    grown = {**_REC, "exchanges": 99}
+    out = bench.check_counts(_budgets(), sf, cpus, {"q": grown})
+    assert out["comparable"] is False
+    assert "flagged" not in out
+    assert f"sf {sf} on {cpus} cpus" in out["reason"]
+
+
+def test_budgets_without_cpus_are_not_comparable():
+    # the wall-budget format bench_budgets.json had before counts
+    old = {"sf": 0.1, "budgets": {"q": 1.0}, "byte_budgets": {}}
+    assert bench.check_counts(old, 0.1, 4, {"q": dict(_REC)})["comparable"] is False
+
+
+def test_update_rewrites_the_counts():
+    bud = _budgets()
+    grown = {**_REC, "shuffle_records": 50}
+    assert bench.check_counts(bud, 0.1, 4, {"q": grown})["n_flagged"] == 1
+    new = bench.recorded_counts(0.1, 4, {"q": grown})
+    assert new == {"sf": 0.1, "cpus": 4, "counts": {"q": grown}}
+    assert bench.check_counts(new, 0.1, 4, {"q": grown})["n_flagged"] == 0
+    # the update stores a copy: later edits to the run's record don't leak in
+    grown["shuffle_records"] = 0
+    assert new["counts"]["q"]["shuffle_records"] == 50
+
+
+def test_committed_budgets_hold_every_headline_query():
+    bud = json.loads((_REPO / "bench_budgets.json").read_text())
+    assert set(bud) == {"sf", "cpus", "counts"}
+    assert set(bud["counts"]) == set(bench.HEADLINE)
+    for rec in bud["counts"].values():
+        assert tuple(rec) == bench.COUNTS
+
+
+def test_profile_query_prints_the_bench_record():
+    """The tracer end to end in its own process (the Spark UI is on there,
+    unlike in the test session): catches drift in perfbench's API."""
+    env = {**os.environ, "SPARK_GRAFT_SF_DIR": SF_DIR,
+           "SPARK_GRAFT_WARMUP_DIR": SF_DIR, "SPARK_GRAFT_WARMUP2_DIR": ""}
+    out = subprocess.run(
+        [sys.executable, str(_REPO / "scripts" / "profile_query.py"),
+         "q1_pricing_summary"],
+        env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    rec = json.loads(next(
+        line for line in out.stdout.splitlines() if line.startswith("{")))
+    assert rec["query"] == "q1_pricing_summary"
+    assert set(bench.COUNTS) <= set(rec)
+    assert rec["exec_jobs"] >= 1 and rec["stages"] >= rec["exec_jobs"]
 
 
 # ------------------------------------- scale-sweep linearity arbitration
@@ -529,50 +275,3 @@ def test_pinned_plan_quadratic_movement_for_linear_answer_still_flags():
         cls, nb_lo, nb_hi, data_ratio=10.0, result_ratio=9.8
     )
     assert out["linear"] is False and out["reasons"] == ["shuffle_write"]
-
-
-def test_loaded_regime_reference_is_labeled_and_excluded():
-    """Round-11 verdict task 6: the budgets file carries ONE explicit
-    loaded-regime epoch — a builder-run bench under deliberate concurrent
-    load — so wall-only arbitration can quote a MEASURED loaded/idle ratio
-    for this host (r11 judge measured 27.8s loaded vs 19.9s idle = 1.4x;
-    this reference records 1.55x) instead of re-deriving it each round.
-
-    Arbitration note: when a bench wall exceeds budget but bytes are
-    identical and the host was not idle-checked, compare the observed
-    inflation against ``loaded_over_idle_ratio`` — an inflation at or
-    under the recorded loaded/idle swing on this host is host regime, not
-    code, and the retime/bytes arbitration (decide_flag) stays the
-    authority. The reference itself must stay OUT of the thresholds:
-    budgets and wall_samples are idle-gated (update_budgets returns False
-    for idle=False), so the loaded walls may never appear there."""
-    import json
-    from pathlib import Path
-
-    bud = json.loads(
-        (Path(__file__).resolve().parent.parent / "bench_budgets.json")
-        .read_text()
-    )
-    ref = bud["loaded_regime_reference"]
-    assert ref["idle"] is False  # labeled as a loaded run
-    assert "EXCLUDED" in ref["note"]
-    assert ref["loaded_over_idle_ratio"] > 1.0
-    assert ref["headline_total_sec"] > ref["idle_reference_total_sec"]
-    # the loaded walls are a reference, not samples: every wall budget must
-    # be strictly below its loaded counterpart's un-normalized wall for the
-    # slowest queries (spot-check: none of the loaded walls ever entered
-    # the idle-gated sample history verbatim)
-    for name, loaded_wall in ref["walls"].items():
-        samples = bud.get("wall_samples", {}).get(name, [])
-        assert loaded_wall not in samples, (name, loaded_wall)
-    # and the idle-gate that enforces the exclusion going forward
-    from bench import update_budgets
-
-    probe = {"budgets": dict(bud["budgets"]), "epoch": bud.get("epoch", 1),
-             "wall_samples": {k: list(v) for k, v in
-                              bud.get("wall_samples", {}).items()}}
-    wrote = update_budgets(
-        probe, ref["walls"], {}, divisor=1.0, idle=False
-    )
-    assert wrote is False
-    assert probe["budgets"] == bud["budgets"]
