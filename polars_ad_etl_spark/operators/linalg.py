@@ -32,9 +32,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from polars_ad_etl_spark.operators.registry import register
-from polars_ad_etl_spark.sources.star import read_star_parquet, EMBEDDING_MAX_ABS, load_embeddings
+from polars_ad_etl_spark.sources.star import (
+    EMBEDDING_DIM,
+    EMBEDDING_MAX_ABS,
+    load_embeddings,
+    read_star_parquet,
+)
 
-DIM = 64
+DIM = EMBEDDING_DIM
 Q_SCALE = 1 << 16  # power of two: float*scale is exact in double arithmetic
 
 _QUANT = f"transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * {Q_SCALE}) AS BIGINT))"
@@ -205,12 +210,13 @@ def top_principal_component(
     SELECT vec_id,
            CASE WHEN embedding IS NULL THEN 'null_vector'
                 WHEN amax IS NULL THEN 'empty_vector'
+                WHEN len(embedding) <> {DIM} THEN 'wrong_dim'
                 WHEN isnan(amax) OR amax = 'infinity'::DOUBLE
                     THEN 'non_finite'
                 WHEN amax <= 0 THEN 'zero_vector'
                 ELSE 'out_of_bound' END AS reason
     FROM probe
-    WHERE embedding IS NULL OR amax IS NULL
+    WHERE embedding IS NULL OR amax IS NULL OR len(embedding) <> {DIM}
        OR NOT (amax > 0 AND amax <= {EMBEDDING_MAX_ABS:g})
     ORDER BY vec_id
     """,
@@ -219,8 +225,9 @@ def top_principal_component(
 def embedding_contract_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The vector contract's quarantine report: every row
     ``load_embeddings`` excludes, with its reason (NULL vector / empty
-    vector / NaN-or-Inf component / zero vector / component magnitude past
-    the envelope bound). The "dropped rows are never silent" side-channel
+    vector / ragged vector of other than ``DIM`` components / NaN-or-Inf
+    component / zero vector / component magnitude past the envelope
+    bound). The "dropped rows are never silent" side-channel
     for the contract — run it next to any vector pipeline to audit what a
     failed encoder batch shipped. Reads the RAW table (``contracts=False``
     opts the oracle out of the rewrite); uses no distance arithmetic, so
@@ -232,6 +239,7 @@ def embedding_contract_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame
     reason = (
         F.when(F.col("embedding").isNull(), "null_vector")
         .when(F.col("amax").isNull(), "empty_vector")
+        .when(F.size("embedding") != DIM, "wrong_dim")
         .when(
             F.isnan("amax") | (F.col("amax") == float("inf")), "non_finite"
         )
@@ -242,6 +250,7 @@ def embedding_contract_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame
         probe.where(
             F.col("embedding").isNull()
             | F.col("amax").isNull()
+            | (F.size("embedding") != DIM)
             | ~((F.col("amax") > 0) & (F.col("amax") <= EMBEDDING_MAX_ABS))
         )
         .select("vec_id", reason.alias("reason"))

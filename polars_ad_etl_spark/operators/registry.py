@@ -48,12 +48,16 @@ ORACLES: dict[str, str] = {}
 # both engines treat NaN as the largest float, so `max <= 16` excludes it
 # identically. The fuzz edge sweep (gen_edge_data.py) planted zero, 1e6-
 # component, and denormal vectors to prove the two predicates agree.
-from polars_ad_etl_spark.sources.star import EMBEDDING_MAX_ABS  # noqa: E402
+from polars_ad_etl_spark.sources.star import (  # noqa: E402
+    EMBEDDING_DIM,
+    EMBEDDING_MAX_ABS,
+)
 
 _TABLE_CONTRACTS: dict[str, str] = {
     "events": "ts IS NOT NULL",
     "embeddings": (
         "embedding IS NOT NULL"
+        f" AND len(embedding) = {EMBEDDING_DIM}"
         " AND list_max(list_transform(embedding, x -> abs(x))) > 0"
         " AND list_max(list_transform(embedding, x -> abs(x)))"
         f" <= {EMBEDDING_MAX_ABS:g}"

@@ -32,12 +32,12 @@ from polars_ad_etl_spark.functions.vectors import (
     signed_projection,
 )
 from polars_ad_etl_spark.operators.registry import register
-from polars_ad_etl_spark.sources.star import load_embeddings
+from polars_ad_etl_spark.sources.star import EMBEDDING_DIM, load_embeddings
 
 N_QUERIES = 8  # vec_id < 8 are the query vectors
 TOP_K = 10
 N_PLANES = 8
-DIM = 64
+DIM = EMBEDDING_DIM
 
 _COS_SQL = (
     "round(list_dot_product(qe, ce) / "

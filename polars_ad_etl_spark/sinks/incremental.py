@@ -24,12 +24,25 @@ which the next data batch does with the same watermark. Upstreams that DO
 emit on watermark advance (streaming aggregates and windows, stream-stream
 joins, ``[FlatMap]GroupsWithState``, ``TransformWithState*``) keep Spark's
 default, so closed windows reach the sink without waiting for more data.
+
+The same helper sizes a stateful query's state partitions from its input.
+Every batch commits one state store per state partition, however few rows
+reach it, and AQE cannot coalesce a stateful shuffle. So a stateful plan
+over file sources with ``maxFilesPerTrigger`` gets one state partition per
+``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (the byte target AQE
+uses for the exchanges it can coalesce) of one trigger's input, taken as
+``maxFilesPerTrigger`` x the largest file now present, between 1 and the
+session's ``spark.sql.shuffle.partitions``. Any other source keeps the
+session's count. The count is fixed at the query's first start: Spark
+records it in the checkpoint's offset log and a restart runs with the
+recorded value.
 """
 
 from __future__ import annotations
 
 import shutil
 import threading
+from fnmatch import fnmatch
 from pathlib import Path
 from typing import Callable
 
@@ -40,26 +53,106 @@ from pyspark.sql.streaming import StreamingQuery
 from polars_ad_etl_spark.plans.schema import quote_ident
 
 _NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_ADVISORY_BYTES = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
 # Name fragments of the logical operators that can emit rows when only the
 # watermark moves (window/aggregate finalization, outer-join rows, state
 # timeouts and timers). A plan with none of them needs no no-data batches.
 _EMITS_ON_WATERMARK = ("Aggregate", "Distinct", "Join", "WithState")
+# ... and of the operators that keep state across batches in a state store
+# partitioned by spark.sql.shuffle.partitions (a Join only when both sides
+# stream).
+_STATEFUL = _EMITS_ON_WATERMARK + ("Deduplicate",)
 # Serializes set-start-restore of the session conf across sink starts.
 _START_LOCK = threading.Lock()
 
 
-def _emits_on_watermark(stream_df: DataFrame) -> bool:
-    """True if the analyzed plan holds an operator that may emit rows on a
-    watermark advance alone (classic-mode plan internals, as in
+def _plan_nodes(stream_df: DataFrame) -> list:
+    """Every node of the analyzed plan (classic-mode plan internals, as in
     ``plans/audit.py``)."""
-    stack = [stream_df._jdf.queryExecution().analyzed()]
+    nodes, stack = [], [stream_df._jdf.queryExecution().analyzed()]
     while stack:
         node = stack.pop()
-        if any(k in node.nodeName() for k in _EMITS_ON_WATERMARK):
-            return True
+        nodes.append(node)
         kids = node.children()
         stack.extend(kids.apply(i) for i in range(kids.size()))
-    return False
+    return nodes
+
+
+def _keeps_state(node) -> bool:
+    """True for a streaming node that keeps state across batches."""
+    name = node.nodeName()
+    if not node.isStreaming() or not any(k in name for k in _STATEFUL):
+        return False
+    kids = node.children()
+    return "Join" not in name or all(
+        kids.apply(i).isStreaming() for i in range(kids.size())
+    )
+
+
+def _largest_file_bytes(spark, path: str, name_glob: str | None) -> int:
+    """Size of the largest data file the file source would read under
+    ``path`` now (hidden ``_``/``.`` files skipped, ``pathGlobFilter``
+    applied to names); 0 when there is none yet."""
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    largest = 0
+    for status in fs.globStatus(hpath) or []:
+        files = fs.listFiles(status.getPath(), True)
+        while files.hasNext():
+            f = files.next()
+            name = f.getPath().getName()
+            if name[0] in "_." or (name_glob and not fnmatch(name, name_glob)):
+                continue
+            largest = max(largest, f.getLen())
+    return largest
+
+
+def _trigger_input_bytes(spark, nodes: list) -> int:
+    """Upper bound on one trigger's input bytes: ``maxFilesPerTrigger`` x
+    the largest file now present, summed over the streaming sources. 0 when
+    any source is not such a file source (rate, Kafka, memory, no
+    ``maxFilesPerTrigger``) or has no file yet."""
+    to_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    total = 0
+    for node in nodes:
+        if node.children().size() or not node.isStreaming():
+            continue
+        if node.nodeName() != "StreamingRelation":
+            return 0
+        opts = {k.lower(): v for k, v in to_java(node.dataSource().options()).items()}
+        if "path" not in opts or "maxfilespertrigger" not in opts:
+            return 0
+        largest = _largest_file_bytes(spark, opts["path"], opts.get("pathglobfilter"))
+        if not largest:
+            return 0
+        total += int(opts["maxfilespertrigger"]) * largest
+    return total
+
+
+def _query_confs(stream_df: DataFrame) -> dict[str, str]:
+    """The confs to set for this query's ``start()`` only.
+
+    - No no-data micro-batches unless the plan emits on watermark advance.
+    - A stateful plan over file sources gets as many state partitions as
+      one trigger's input fills at AQE's advisory partition size, between 1
+      and the session's ``spark.sql.shuffle.partitions``. A state store
+      cannot be coalesced after the fact, so each partition costs a
+      state-store commit on every batch however few rows it holds."""
+    spark = stream_df.sparkSession
+    nodes = _plan_nodes(stream_df)
+    names = [n.nodeName() for n in nodes]
+    confs = {}
+    if not any(k in name for name in names for k in _EMITS_ON_WATERMARK):
+        confs[_NO_DATA_BATCHES] = "false"
+    trigger_bytes = any(map(_keeps_state, nodes)) and _trigger_input_bytes(spark, nodes)
+    if trigger_bytes:
+        as_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+        target = as_bytes(spark.conf.get(_ADVISORY_BYTES))
+        session_n = int(spark.conf.get(_SHUFFLE_PARTITIONS))
+        confs[_SHUFFLE_PARTITIONS] = str(min(-(-trigger_bytes // target), session_n))
+    return confs
 
 
 def _start_foreach_batch(
@@ -67,28 +160,37 @@ def _start_foreach_batch(
     checkpoint: str | Path,
     fn: Callable[[DataFrame, int], None],
 ) -> StreamingQuery:
-    """Start an append-mode foreachBatch query. Unless the plan emits on
-    watermark advance, no-data micro-batches are turned off for this query
-    only: Spark copies the session conf into the query at ``start()``, and
-    the session's previous value is restored right after."""
+    """Start an append-mode foreachBatch query with :func:`_query_confs`
+    set for this query only: Spark copies the session conf into the query
+    at ``start()``, and the session's previous values are restored right
+    after (a key that was unset is unset again), also when ``start()``
+    raises.
+
+    The state partition count is fixed at the query's FIRST start: Spark
+    records ``spark.sql.shuffle.partitions`` in the checkpoint's offset log
+    and a restart runs with the recorded value, so a checkpoint written at
+    any count keeps it and the override here does nothing to it. The batch
+    frames inside ``fn`` run on the query's session and so use the same
+    count for their own exchanges."""
     writer = (
         stream_df.writeStream.outputMode("append")
         .option("checkpointLocation", str(checkpoint))
         .foreachBatch(fn)
     )
-    if _emits_on_watermark(stream_df):
-        return writer.start()
+    confs = _query_confs(stream_df)
     conf = stream_df.sparkSession.conf
     with _START_LOCK:
-        prev = conf.get(_NO_DATA_BATCHES, None)
-        conf.set(_NO_DATA_BATCHES, "false")
+        prev = {k: conf.get(k, None) for k in confs}
+        for k, v in confs.items():
+            conf.set(k, v)
         try:
             return writer.start()
         finally:
-            if prev is None:
-                conf.unset(_NO_DATA_BATCHES)
-            else:
-                conf.set(_NO_DATA_BATCHES, prev)
+            for k, v in prev.items():
+                if v is None:
+                    conf.unset(k)
+                else:
+                    conf.set(k, v)
 
 
 def write_partition_overwrite(

@@ -281,14 +281,20 @@ def load_documents(
 # envelope arithmetic against the quantization scales, so raising either
 # side without the other fails loudly.
 EMBEDDING_MAX_ABS = 16.0
+# Vector shape, declared once for both engines' contract predicates: the
+# per-dimension operators (centroids, covariance, PQ sub-vectors) index
+# dims 1..EMBEDDING_DIM and average over rows, so a ragged vector would
+# skew its label's tail dimensions instead of failing.
+EMBEDDING_DIM = 64
 
 
 def load_embeddings(spark: SparkSession, sf_dir: str | Path) -> DataFrame:
     """The embeddings table with its vector contract applied: a row is
-    excluded when it has no vector (failed encoder batch), a zero vector
-    (no cosine direction), or components outside (0, 16] in magnitude
-    (NaN/Inf/overflow would poison the exact-integer distance arithmetic;
-    real corpus components are < 0.6 — see the envelope math at
+    excluded when it has no vector (failed encoder batch), a vector of
+    other than ``EMBEDDING_DIM`` components (a ragged encoder batch), a
+    zero vector (no cosine direction), or components outside (0, 16] in
+    magnitude (NaN/Inf/overflow would poison the exact-integer distance
+    arithmetic; real corpus components are < 0.6 — see the envelope math at
     operators/registry.py::_TABLE_CONTRACTS). Declared ONCE here for the
     Spark side; the oracle side gets the equivalent predicate via
     _apply_table_contracts. Both engines compare NaN as the largest
@@ -297,6 +303,7 @@ def load_embeddings(spark: SparkSession, sf_dir: str | Path) -> DataFrame:
     amax = F.array_max(F.transform(F.col("embedding"), F.abs))
     return df.where(
         F.col("embedding").isNotNull()
+        & (F.size("embedding") == EMBEDDING_DIM)
         & (amax > 0)
         & (amax <= EMBEDDING_MAX_ABS)
     )

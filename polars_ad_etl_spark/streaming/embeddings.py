@@ -49,7 +49,11 @@ from polars_ad_etl_spark.operators.dedup import (
     _bucket_expr,
     _vec_is_batch,
 )
-from polars_ad_etl_spark.sources.star import read_star_parquet, EMBEDDING_MAX_ABS
+from polars_ad_etl_spark.sources.star import (
+    EMBEDDING_DIM,
+    EMBEDDING_MAX_ABS,
+    read_star_parquet,
+)
 from polars_ad_etl_spark.streaming.events import _dir_has_parquet, _is_directory
 
 _EMB_SCHEMA = T.StructType(
@@ -89,12 +93,14 @@ def _vector_key(col) -> F.Column:
 
 def _contract(e: DataFrame) -> DataFrame:
     """The embeddings table contract (sources/star.py::load_embeddings),
-    restated for the stream source: no vector, a zero vector, or an
-    out-of-envelope component excludes the row on BOTH the corpus and the
-    stream side, so the two engines of the lambda split see one relation."""
+    restated for the stream source: no vector, a ragged vector, a zero
+    vector, or an out-of-envelope component excludes the row on BOTH the
+    corpus and the stream side, so the two engines of the lambda split see
+    one relation."""
     amax = F.array_max(F.transform(F.col("embedding"), F.abs))
     return e.where(
         F.col("embedding").isNotNull()
+        & (F.size("embedding") == EMBEDDING_DIM)
         & (amax > 0)
         & (amax <= EMBEDDING_MAX_ABS)
     )

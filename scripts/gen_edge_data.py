@@ -33,8 +33,8 @@ Variants:
            Only the detector is oracle-compared on this variant.
   fuzz   — seeded value-domain perturbations on the same strides:
            negative/zero/huge monetary values, empty strings, tab/newline
-           whitespace and non-ASCII text, zero and large-component
-           embedding vectors, unseen enum values. The nulls variant
+           whitespace and non-ASCII text, zero, large-component and
+           ragged embedding vectors, unseen enum values. The nulls variant
            changes NULL-ness but never values; this variant probes the
            value edges (sign handling in integer div, tokenizer
            whitespace dialects, unicode hashing, overflow headroom).
@@ -189,6 +189,9 @@ FUZZ_PLAN: dict[str, dict[str, list]] = {
             # report must label them
             (17, 3, lambda v: [float("nan")] + [0.1] * (len(v) - 1)),
             (17, 4, lambda v: []),
+            # a ragged vector (half the dimensions): outside the shape
+            # contract on both engines, labelled wrong_dim in the report
+            (17, 5, lambda v: v[: len(v) // 2]),
         ],
         "label": [(13, 0, -1)],
     },

@@ -19,6 +19,7 @@ import time
 from pyspark.sql import functions as F
 
 from polars_ad_etl_spark.sources.star import (
+    EMBEDDING_DIM,
     load_documents_bucketed_by_hash,
     load_documents_bucketed_by_id,
     load_embeddings_bucketed,
@@ -68,11 +69,13 @@ def test_unchanged_source_reuses_the_materialized_table(spark, tmp_path):
 
 def test_embeddings_store_applies_the_vector_contract(spark, tmp_path):
     sf = str(tmp_path)
+    d = EMBEDDING_DIM
     rows = [
-        (0, [0.1] * 4, 1),
+        (0, [0.1] * d, 1),
         (1, None, 1),          # vector-less row: excluded
-        (2, [0.0] * 4, 2),     # zero vector: excluded
-        (3, [99.0] * 4, 2),    # out of envelope: excluded
+        (2, [0.0] * d, 2),     # zero vector: excluded
+        (3, [99.0] * d, 2),    # out of envelope: excluded
+        (4, [0.1] * (d // 2), 2),  # ragged vector: excluded
     ]
     spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
@@ -94,7 +97,7 @@ def test_compaction_job_prebuilds_and_loaders_reuse(spark, tmp_path):
     sf = str(tmp_path)
     _write_docs(spark, sf + "/documents.parquet", ["a", "b", "b"])
     spark.createDataFrame(
-        [(0, [0.5] * 4, 1), (1, [0.25] * 4, 2)],
+        [(0, [0.5] * EMBEDDING_DIM, 1), (1, [0.25] * EMBEDDING_DIM, 2)],
         "vec_id long, embedding array<float>, label int",
     ).coalesce(1).write.mode("overwrite").parquet(
         sf + "/embeddings.parquet"

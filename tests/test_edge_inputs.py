@@ -457,3 +457,46 @@ def test_grand_total_guard_is_limit1_not_rescan(spark, empty_dir):
     (r,) = rows
     assert r.l_returnflag is None and r.l_linestatus is None
     assert r.revenue is None and r.n_rows == 0
+
+
+def test_ragged_vector_is_outside_the_contract(spark, tmp_path):
+    """A vector of other than ``EMBEDDING_DIM`` components is excluded by
+    the contract on both engines: the label centroids equal those of the
+    full vectors alone (a kept ragged row would count in its label's
+    mean without adding to its tail dimensions), and the quarantine report
+    labels the row ``wrong_dim``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from polars_ad_etl_spark.operators.similarity import _label_centroid_arrays
+    from polars_ad_etl_spark.sources.star import EMBEDDING_DIM, load_embeddings
+
+    # 8 vectors over two labels; components are multiples of 1/64, exact
+    # in float32
+    rows = [
+        {"vec_id": i, "label": i % 2,
+         "embedding": [((i + j) % 9 + 1) / 64 for j in range(EMBEDDING_DIM)]}
+        for i in range(8)
+    ]
+    ragged = 3
+    rows[ragged]["embedding"] = rows[ragged]["embedding"][: EMBEDDING_DIM // 2]
+    schema = pa.schema([("vec_id", pa.int64()),
+                        ("embedding", pa.list_(pa.float32())),
+                        ("label", pa.int32())])
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=schema), tmp_path / "embeddings.parquet"
+    )
+    d = str(tmp_path)
+
+    def centroids(e):
+        return {r.label: r.ce for r in _label_centroid_arrays(e).collect()}
+
+    raw = spark.read.parquet(f"{d}/embeddings.parquet")
+    full = raw.where(F.size("embedding") == EMBEDDING_DIM)
+    assert load_embeddings(spark, d).count() == len(rows) - 1
+    assert centroids(load_embeddings(spark, d)) == centroids(full)
+    for name in ("embedding_label_centroids", "embedding_contract_quarantine"):
+        _check(spark, d, name)
+    report = QUERIES["embedding_contract_quarantine"](spark, d).collect()
+    assert [(r.vec_id, r.reason) for r in report] == [(ragged, "wrong_dim")]

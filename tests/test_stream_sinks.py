@@ -1,7 +1,8 @@
 """The foreachBatch incremental sinks cost one micro-batch and one Spark job
 per landed file behind a de-duplicating stream, keep Spark's no-data batches
-for upstreams that emit on watermark advance, and leave the caller's session
-conf as they found it.
+for upstreams that emit on watermark advance, size a new stateful query's
+state partitions from its per-trigger input (a checkpoint keeps the count it
+was started with), and leave the caller's session conf as they found it.
 
 Files land one at a time in a watched directory (atomic rename), each drained
 with ``processAllAvailable()``. The counts below are deterministic: progress
@@ -18,13 +19,16 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
 
 from polars_ad_etl_spark.sinks.incremental import (
+    _query_confs,
     compact_agg_deltas,
     read_incremental_agg,
     stream_incremental_agg,
     stream_to_partitioned_parquet,
     stream_upsert_latest,
+    write_agg_delta,
 )
 from polars_ad_etl_spark.streaming import (
     dedup_events_stream,
@@ -33,6 +37,8 @@ from polars_ad_etl_spark.streaming import (
 )
 
 NO_DATA = "spark.sql.streaming.noDataMicroBatches.enabled"
+PARTITIONS = "spark.sql.shuffle.partitions"
+ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
 DAY = dt.datetime(2024, 1, 1)
 SCHEMA = pa.schema([
     ("event_id", pa.int64()), ("ts", pa.timestamp("us")), ("user_id", pa.int64()),
@@ -193,18 +199,21 @@ _SINKS = {
 
 @pytest.mark.parametrize("sink", sorted(_SINKS))
 def test_sink_start_leaves_session_conf_unchanged(spark, tmp_path, sink):
-    """Each sink turns no-data batches off for its own query only: the
-    session conf reads the same after ``start()`` returns and after it
-    raises, and the started query still runs one batch per file."""
+    """Each sink turns no-data batches off and sets the state partition
+    count for its own query only: the session conf reads the same after
+    ``start()`` returns and after it raises, and the started query still
+    runs one batch per file."""
     start = _SINKS[sink]
     src = Landing(tmp_path / "src")
     src.land(_hour_rows(0, 10))
     before = spark.conf.get(NO_DATA)
+    before_partitions = spark.conf.get(PARTITIONS)
 
     events = dedup_events_stream(read_events_stream(spark, str(src.root)))
     q = start(events, tmp_path / "out", tmp_path / "ckpt")
     try:
         assert spark.conf.get(NO_DATA) == before
+        assert spark.conf.get(PARTITIONS) == before_partitions
         q.processAllAvailable()
         src.land(_hour_rows(10, 13))
         q.processAllAvailable()
@@ -217,6 +226,7 @@ def test_sink_start_leaves_session_conf_unchanged(spark, tmp_path, sink):
     with pytest.raises(AnalysisException):
         start(events.orderBy("event_id"), tmp_path / "out2", tmp_path / "ckpt2")
     assert spark.conf.get(NO_DATA) == before
+    assert spark.conf.get(PARTITIONS) == before_partitions
 
 
 def test_dotted_names_through_stream_view_and_compaction(spark, tmp_path):
@@ -249,3 +259,101 @@ def test_dotted_names_through_stream_view_and_compaction(spark, tmp_path):
     compact_agg_deltas(spark, store, ["Ad.Type"])
     assert [p.name for p in store.iterdir()] == ["batch_id=-1"]
     assert view() == want
+
+
+def _state_instances(progress: list) -> list[list[int]]:
+    return [[op["numStateStoreInstances"] for op in p["stateOperators"]]
+            for p in progress if p["numInputRows"] > 0]
+
+
+def test_state_partitions_follow_trigger_input_at_first_start(spark, tmp_path):
+    """A stateful plan over a file source gets ceil(maxFilesPerTrigger x
+    largest file / advisory partition size) state partitions, at most the
+    session's count; plans that keep no state (a stream-static join keeps
+    none), or read a source that is not such a file source, keep the
+    session's count."""
+    src = Landing(tmp_path / "src")
+    src.land(_hour_rows(0, 10))
+    size = max(f.stat().st_size for f in src.watched.iterdir())
+    session_n = int(spark.conf.get(PARTITIONS))
+    assert session_n == 4
+
+    def partitions(df):
+        return _query_confs(df).get(PARTITIONS)
+
+    # the session's 64 MB advisory size: one small file fills one partition
+    assert partitions(dedup_events_stream(read_events_stream(spark, str(src.root)))) == "1"
+    static = spark.range(3).withColumnRenamed("id", "user_id")
+    prev = spark.conf.get(ADVISORY, None)
+    spark.conf.set(ADVISORY, str(size // 2 + 1))
+    try:
+        for files, want in ((1, "2"), (3, str(session_n))):
+            events = read_events_stream(spark, str(src.root), files)
+            assert partitions(dedup_events_stream(events)) == want
+            assert partitions(hourly_rollup_stream(events)) == want
+            assert partitions(events) is None  # not stateful
+            assert partitions(events.join(static, "user_id")) is None
+        rate = spark.readStream.format("rate").load()
+        assert partitions(rate.withWatermark("timestamp", "1 minute")
+                          .dropDuplicates(["value"])) is None
+        empty = Landing(tmp_path / "empty")
+        empty.watched.joinpath("_SUCCESS").touch()  # hidden: not a data file
+        no_file = spark.readStream.schema(events.schema).option(
+            "maxFilesPerTrigger", 1).parquet(str(empty.watched))
+        assert partitions(no_file.dropDuplicates(["event_id"])) is None
+    finally:
+        if prev is None:
+            spark.conf.unset(ADVISORY)
+        else:
+            spark.conf.set(ADVISORY, prev)
+
+
+def test_checkpoint_keeps_its_state_partition_count(spark, tmp_path):
+    """A checkpoint first started at the session's 4 state partitions
+    restarts through ``stream_incremental_agg`` at 4, and the same stream
+    started fresh runs at 1; both give the exact totals."""
+    src = Landing(tmp_path / "src")
+    files = [_hour_rows(0, 10), _hour_rows(10, 13), _hour_rows(20, 16)]
+    src.land(files[0])
+    events = dedup_events_stream(read_events_stream(spark, str(src.root)))
+    store, ckpt = tmp_path / "agg", tmp_path / "ckpt"
+
+    def write_partial(batch_df, batch_id):
+        write_agg_delta(batch_df.groupBy("event_type").agg(
+            F.count("*").alias("cnt"), F.sum("value").alias("sum_value")
+        ), store, batch_id)
+
+    q = (events.writeStream.option("checkpointLocation", str(ckpt))
+         .foreachBatch(write_partial).start())
+    try:
+        q.processAllAvailable()
+        first = q.recentProgress
+    finally:
+        q.stop()
+    for rows in files[1:]:
+        src.land(rows)
+    q = stream_incremental_agg(events, store, ["event_type"], "value", ckpt)
+    try:
+        q.processAllAvailable()
+        restarted = q.recentProgress
+    finally:
+        q.stop()
+    fresh_store = tmp_path / "fresh"
+    q = stream_incremental_agg(
+        events, fresh_store, ["event_type"], "value", tmp_path / "fresh_ckpt"
+    )
+    try:
+        q.processAllAvailable()
+        fresh = q.recentProgress
+    finally:
+        q.stop()
+
+    assert _state_instances(first) == [[4]]
+    assert _state_instances(restarted) == [[4], [4]]
+    assert _state_instances(fresh) == [[1], [1], [1]]
+    want = {}
+    for r in (r for rows in files for r in rows):
+        c, v = want.get((r[2],), (0, 0.0))
+        want[(r[2],)] = (c + 1, v + r[3])
+    assert _totals(spark, store, ["event_type"]) == want
+    assert _totals(spark, fresh_store, ["event_type"]) == want
