@@ -27,15 +27,16 @@ default, so closed windows reach the sink without waiting for more data.
 
 The same helper sizes a stateful query's state partitions from its input.
 Every batch commits one state store per state partition, however few rows
-reach it, and AQE cannot coalesce a stateful shuffle. So a stateful plan
-over file sources with ``maxFilesPerTrigger`` gets one state partition per
-``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (the byte target AQE
-uses for the exchanges it can coalesce) of one trigger's input, taken as
+reach it, and AQE cannot coalesce a stateful shuffle. So a new stateful
+query over file sources with ``maxFilesPerTrigger`` gets one state
+partition per ``_STATE_PARTITION_BYTES`` (8 MB, where two partitions began
+to beat one in a measured sweep) of one trigger's input, taken as
 ``maxFilesPerTrigger`` x the largest file now present, between 1 and the
 session's ``spark.sql.shuffle.partitions``. Any other source keeps the
-session's count. The count is fixed at the query's first start: Spark
-records it in the checkpoint's offset log and a restart runs with the
-recorded value.
+session's count, and so does the keyed-upsert sink, whose batch Window
+shuffles its whole store. The count is fixed at the query's first start:
+Spark records it in the checkpoint's offset log and a restart runs with the
+recorded value, so a restart lists no files for it.
 """
 
 from __future__ import annotations
@@ -54,7 +55,12 @@ from polars_ad_etl_spark.plans.schema import quote_ident
 
 _NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
-_ADVISORY_BYTES = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+# One state partition per this many bytes of one trigger's input. Measured
+# on a 4-core host (de-dup -> stream_incremental_agg, one parquet file per
+# trigger, 1/2/4 partitions, 3 runs): at 3.3 and 5.8 MB per trigger two
+# partitions cut the batch p50 by 11-26 % for 8-17 % more CPU; at 10.9 MB
+# they cut it by 35 % for 4 % less CPU, and at 44 MB four and two tie.
+_STATE_PARTITION_BYTES = 8 << 20
 # Name fragments of the logical operators that can emit rows when only the
 # watermark moves (window/aggregate finalization, outer-join rows, state
 # timeouts and timers). A plan with none of them needs no no-data batches.
@@ -90,22 +96,29 @@ def _keeps_state(node) -> bool:
     )
 
 
+def _hidden(name: str) -> bool:
+    """A name the file source skips (``_SUCCESS``, ``_temporary``,
+    ``_spark_metadata``, ``.crc`` files); ``_key=value`` partition
+    directories are read."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
 def _largest_file_bytes(spark, path: str, name_glob: str | None) -> int:
     """Size of the largest data file the file source would read under
-    ``path`` now (hidden ``_``/``.`` files skipped, ``pathGlobFilter``
+    ``path`` now (hidden files and directories skipped, ``pathGlobFilter``
     applied to names); 0 when there is none yet."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    largest = 0
-    for status in fs.globStatus(hpath) or []:
-        files = fs.listFiles(status.getPath(), True)
-        while files.hasNext():
-            f = files.next()
-            name = f.getPath().getName()
-            if name[0] in "_." or (name_glob and not fnmatch(name, name_glob)):
+    largest, dirs = 0, [s.getPath() for s in fs.globStatus(hpath) or []]
+    while dirs:
+        for status in fs.listStatus(dirs.pop()):
+            name = status.getPath().getName()
+            if _hidden(name):
                 continue
-            largest = max(largest, f.getLen())
+            if status.isDirectory():
+                dirs.append(status.getPath())
+            elif not name_glob or fnmatch(name, name_glob):
+                largest = max(largest, status.getLen())
     return largest
 
 
@@ -131,27 +144,42 @@ def _trigger_input_bytes(spark, nodes: list) -> int:
     return total
 
 
-def _query_confs(stream_df: DataFrame) -> dict[str, str]:
+def _has_offset_log(spark, checkpoint: str | Path) -> bool:
+    """True once the query at ``checkpoint`` has planned a batch: its offset
+    log then holds the state partition count every restart runs with."""
+    offsets = spark._jvm.org.apache.hadoop.fs.Path(f"{checkpoint}/offsets")
+    fs = offsets.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs.exists(offsets) and len(fs.listStatus(offsets)) > 0
+
+
+def _query_confs(
+    stream_df: DataFrame, checkpoint: str | Path, size_state: bool
+) -> dict[str, str]:
     """The confs to set for this query's ``start()`` only.
 
     - No no-data micro-batches unless the plan emits on watermark advance.
-    - A stateful plan over file sources gets as many state partitions as
-      one trigger's input fills at AQE's advisory partition size, between 1
-      and the session's ``spark.sql.shuffle.partitions``. A state store
-      cannot be coalesced after the fact, so each partition costs a
-      state-store commit on every batch however few rows it holds."""
+    - With ``size_state``, a stateful plan over file sources that starts a
+      new checkpoint gets one state partition per ``_STATE_PARTITION_BYTES``
+      of one trigger's input, between 1 and the session's
+      ``spark.sql.shuffle.partitions``. A state store cannot be coalesced
+      after the fact, so each partition costs a state-store commit on every
+      batch however few rows it holds."""
     spark = stream_df.sparkSession
     nodes = _plan_nodes(stream_df)
     names = [n.nodeName() for n in nodes]
     confs = {}
     if not any(k in name for name in names for k in _EMITS_ON_WATERMARK):
         confs[_NO_DATA_BATCHES] = "false"
-    trigger_bytes = any(map(_keeps_state, nodes)) and _trigger_input_bytes(spark, nodes)
+    trigger_bytes = (
+        size_state
+        and any(map(_keeps_state, nodes))
+        and not _has_offset_log(spark, checkpoint)
+        and _trigger_input_bytes(spark, nodes)
+    )
     if trigger_bytes:
-        as_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
-        target = as_bytes(spark.conf.get(_ADVISORY_BYTES))
+        n = -(-trigger_bytes // _STATE_PARTITION_BYTES)
         session_n = int(spark.conf.get(_SHUFFLE_PARTITIONS))
-        confs[_SHUFFLE_PARTITIONS] = str(min(-(-trigger_bytes // target), session_n))
+        confs[_SHUFFLE_PARTITIONS] = str(min(n, session_n))
     return confs
 
 
@@ -159,27 +187,30 @@ def _start_foreach_batch(
     stream_df: DataFrame,
     checkpoint: str | Path,
     fn: Callable[[DataFrame, int], None],
+    size_state: bool = True,
 ) -> StreamingQuery:
     """Start an append-mode foreachBatch query with :func:`_query_confs`
     set for this query only: Spark copies the session conf into the query
     at ``start()``, and the session's previous values are restored right
     after (a key that was unset is unset again), also when ``start()``
-    raises.
+    raises. The confs are read and chosen under the lock too, so a
+    concurrent start never sees another query's temporary values.
 
     The state partition count is fixed at the query's FIRST start: Spark
     records ``spark.sql.shuffle.partitions`` in the checkpoint's offset log
     and a restart runs with the recorded value, so a checkpoint written at
-    any count keeps it and the override here does nothing to it. The batch
+    any count keeps it (its files are then not listed at all). The batch
     frames inside ``fn`` run on the query's session and so use the same
-    count for their own exchanges."""
+    count for their own exchanges: a sink whose batch work grows with
+    something other than the trigger passes ``size_state=False``."""
     writer = (
         stream_df.writeStream.outputMode("append")
         .option("checkpointLocation", str(checkpoint))
         .foreachBatch(fn)
     )
-    confs = _query_confs(stream_df)
     conf = stream_df.sparkSession.conf
     with _START_LOCK:
+        confs = _query_confs(stream_df, checkpoint, size_state)
         prev = {k: conf.get(k, None) for k in confs}
         for k, v in confs.items():
             conf.set(k, v)
@@ -299,7 +330,9 @@ def stream_upsert_latest(
         if not batch_df.isEmpty():
             upsert_latest_by_key(batch_df, path, key_cols, version_cols)
 
-    return _start_foreach_batch(stream_df, checkpoint, _apply)
+    # each batch's Window shuffles the whole store, which outgrows any one
+    # trigger, so the query keeps the session's partition count
+    return _start_foreach_batch(stream_df, checkpoint, _apply, size_state=False)
 
 
 # ------------------------------------------------ incremental aggregation

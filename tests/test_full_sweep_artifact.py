@@ -113,7 +113,10 @@ def test_streaming_bench_artifact_has_all_stateful_rows():
         assert isinstance(block, dict) and not block.get("error"), (
             f"{p.name} missing/errored {row}: {block}"
         )
-        assert block.get("ceiling_rows_per_sec_p50", 0) > 0, (
+        # a stress offered a rate it sustains reports no ceiling
+        rate = block.get("ceiling_rows_per_sec_p50",
+                         block.get("unsaturated_rows_per_sec_p50", 0))
+        assert rate > 0, (
             f"{p.name} {row} recorded no completed batches"
         )
         assert not block.get("query_error"), f"{p.name} {row}: {block['query_error']}"

@@ -12,6 +12,7 @@ foreachBatch actions run), not wall clock."""
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
 from pathlib import Path
 
@@ -21,6 +22,7 @@ import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
+from polars_ad_etl_spark.sinks import incremental
 from polars_ad_etl_spark.sinks.incremental import (
     _query_confs,
     compact_agg_deltas,
@@ -38,7 +40,6 @@ from polars_ad_etl_spark.streaming import (
 
 NO_DATA = "spark.sql.streaming.noDataMicroBatches.enabled"
 PARTITIONS = "spark.sql.shuffle.partitions"
-ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
 DAY = dt.datetime(2024, 1, 1)
 SCHEMA = pa.schema([
     ("event_id", pa.int64()), ("ts", pa.timestamp("us")), ("user_id", pa.int64()),
@@ -85,6 +86,13 @@ def _totals(spark, store: Path, keys: list[str]) -> dict:
         tuple(r[k] for k in keys): (r["cnt"], r["sum_value"])
         for r in read_incremental_agg(spark, store, keys).collect()
     }
+
+
+def _recorded_partitions(ckpt: Path) -> str:
+    """The state partition count the checkpoint's first offset entry holds,
+    which every later batch and restart of the query runs with."""
+    meta = json.loads((ckpt / "offsets" / "0").read_text().splitlines()[1])
+    return meta["conf"][PARTITIONS]
 
 
 def _stream_jobs(spark, query) -> int:
@@ -221,6 +229,10 @@ def test_sink_start_leaves_session_conf_unchanged(spark, tmp_path, sink):
     finally:
         q.stop()
     assert [p["numInputRows"] for p in progress] == [4, 4]
+    # the upsert's batch Window shuffles its whole store, so that sink keeps
+    # the session's count; the others size it from the one-file trigger
+    want = before_partitions if sink == "upsert_latest" else "1"
+    assert _recorded_partitions(tmp_path / "ckpt") == want
 
     # sorting a non-aggregated stream is rejected inside start()
     with pytest.raises(AnalysisException):
@@ -266,11 +278,15 @@ def _state_instances(progress: list) -> list[list[int]]:
             for p in progress if p["numInputRows"] > 0]
 
 
-def test_state_partitions_follow_trigger_input_at_first_start(spark, tmp_path):
-    """A stateful plan over a file source gets ceil(maxFilesPerTrigger x
-    largest file / advisory partition size) state partitions, at most the
-    session's count; plans that keep no state (a stream-static join keeps
-    none), or read a source that is not such a file source, keep the
+def test_state_partitions_follow_trigger_input_at_first_start(
+    spark, tmp_path, monkeypatch
+):
+    """A stateful plan over a file source that starts a new checkpoint gets
+    ceil(maxFilesPerTrigger x largest file / byte target) state partitions,
+    at most the session's count. Files under hidden directories do not
+    count. Plans that keep no state (a stream-static join keeps none), read
+    a source that is not such a file source, start a checkpoint that already
+    holds an offset log, or are started with ``size_state=False`` keep the
     session's count."""
     src = Landing(tmp_path / "src")
     src.land(_hour_rows(0, 10))
@@ -278,34 +294,35 @@ def test_state_partitions_follow_trigger_input_at_first_start(spark, tmp_path):
     session_n = int(spark.conf.get(PARTITIONS))
     assert session_n == 4
 
-    def partitions(df):
-        return _query_confs(df).get(PARTITIONS)
+    def partitions(df, ckpt=tmp_path / "new", size_state=True):
+        return _query_confs(df, ckpt, size_state).get(PARTITIONS)
 
-    # the session's 64 MB advisory size: one small file fills one partition
+    # one small file fills one partition at the module's byte target
     assert partitions(dedup_events_stream(read_events_stream(spark, str(src.root)))) == "1"
     static = spark.range(3).withColumnRenamed("id", "user_id")
-    prev = spark.conf.get(ADVISORY, None)
-    spark.conf.set(ADVISORY, str(size // 2 + 1))
-    try:
-        for files, want in ((1, "2"), (3, str(session_n))):
-            events = read_events_stream(spark, str(src.root), files)
-            assert partitions(dedup_events_stream(events)) == want
-            assert partitions(hourly_rollup_stream(events)) == want
-            assert partitions(events) is None  # not stateful
-            assert partitions(events.join(static, "user_id")) is None
-        rate = spark.readStream.format("rate").load()
-        assert partitions(rate.withWatermark("timestamp", "1 minute")
-                          .dropDuplicates(["value"])) is None
-        empty = Landing(tmp_path / "empty")
-        empty.watched.joinpath("_SUCCESS").touch()  # hidden: not a data file
-        no_file = spark.readStream.schema(events.schema).option(
-            "maxFilesPerTrigger", 1).parquet(str(empty.watched))
-        assert partitions(no_file.dropDuplicates(["event_id"])) is None
-    finally:
-        if prev is None:
-            spark.conf.unset(ADVISORY)
-        else:
-            spark.conf.set(ADVISORY, prev)
+    monkeypatch.setattr(incremental, "_STATE_PARTITION_BYTES", size // 2 + 1)
+    hidden = src.watched / "_temporary" / "0"
+    hidden.mkdir(parents=True)
+    (hidden / "part-00000.parquet").write_bytes(b"x" * 10 * size)
+    for files, want in ((1, "2"), (3, str(session_n))):
+        events = read_events_stream(spark, str(src.root), files)
+        assert partitions(dedup_events_stream(events)) == want
+        assert partitions(hourly_rollup_stream(events)) == want
+        assert partitions(dedup_events_stream(events), size_state=False) is None
+        assert partitions(events) is None  # not stateful
+        assert partitions(events.join(static, "user_id")) is None
+    started = tmp_path / "started"
+    (started / "offsets").mkdir(parents=True)
+    (started / "offsets" / "0").write_text("v1")
+    assert partitions(dedup_events_stream(events), started) is None
+    rate = spark.readStream.format("rate").load()
+    assert partitions(rate.withWatermark("timestamp", "1 minute")
+                      .dropDuplicates(["value"])) is None
+    empty = Landing(tmp_path / "empty")
+    empty.watched.joinpath("_SUCCESS").touch()  # hidden: not a data file
+    no_file = spark.readStream.schema(events.schema).option(
+        "maxFilesPerTrigger", 1).parquet(str(empty.watched))
+    assert partitions(no_file.dropDuplicates(["event_id"])) is None
 
 
 def test_checkpoint_keeps_its_state_partition_count(spark, tmp_path):
