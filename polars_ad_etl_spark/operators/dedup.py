@@ -29,6 +29,8 @@ Scale design (100 TB):
 from __future__ import annotations
 
 import functools
+import itertools
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1200,11 +1202,12 @@ def connected_components_propagate(edges: DataFrame) -> DataFrame:
     second cut was tried and REVERTED: deriving ``sym`` lazily from the
     caller's checkpointed edges saved its barrier but tripled every
     iteration's plan (the union subtree re-planned per step), measured
-    +0.34 s of driver analysis per call — the checkpoint stays."""
-    sym = edges.filter(F.col("a") != F.col("b"))
-    sym = sym.unionByName(
-        sym.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint(eager=True)
+    +0.34 s of driver analysis per call — the checkpoint stays. The loop
+    is :func:`_iterate`: one checkpoint and one ``isEmpty`` test per
+    double-step."""
+    sym = _symmetric(edges.filter(F.col("a") != F.col("b"))).localCheckpoint(
+        eager=True
+    )
     # Scale-adaptive single-partition fast path (the inverse of
     # spread_scan): when the MATERIALIZED edge list came back in <= 2
     # partitions, AQE has already sized it as tiny, and the loop's wall is
@@ -1221,68 +1224,80 @@ def connected_components_propagate(edges: DataFrame) -> DataFrame:
     if sym.rdd.getNumPartitions() <= 2:
         sym = sym.coalesce(1)
 
-    def step(lbl: DataFrame) -> DataFrame:
+    def half(lbl: DataFrame) -> DataFrame:
         neighbor_min = (
             sym.join(lbl, sym.b == lbl.node)
             .groupBy(F.col("a").alias("node"))
             .agg(F.min("component_id").alias("nbr_min"))
         )
+        nbr = F.coalesce("nbr_min", "component_id")
         return lbl.join(neighbor_min, "node", "left_outer").select(
             "node",
-            F.least(
-                "component_id", F.coalesce("nbr_min", "component_id")
-            ).alias("component_id"),
+            F.least("component_id", nbr).alias("component_id"),
+            (nbr < F.col("component_id")).alias("changed"),
         )
 
-    def step_flagged(lbl: DataFrame) -> DataFrame:
-        neighbor_min = (
-            sym.join(lbl, sym.b == lbl.node)
-            .groupBy(F.col("a").alias("node"))
-            .agg(F.min("component_id").alias("nbr_min"))
-        )
-        return lbl.join(neighbor_min, "node", "left_outer").select(
-            "node",
-            F.least(
-                "component_id", F.coalesce("nbr_min", "component_id")
-            ).alias("component_id"),
-            (
-                F.coalesce("nbr_min", "component_id") < F.col("component_id")
-            ).alias("changed"),
-        )
+    # Round-12 job-count cut (the loop's wall at bench scale was pure
+    # per-job latency, not data): TWO propagation steps compose lazily
+    # into ONE materialization. The min-label fixpoint is unique, so
+    # stride is semantics-free, and testing only the SECOND step's
+    # changed flag is exact: step 2 changing nothing means its input
+    # was already a fixpoint (the first step's flag is pruned unused).
+    def step(lbl: DataFrame) -> DataFrame:
+        return half(half(lbl.drop("changed")).drop("changed"))
 
     # Seed: label(v) = least(v, min(neighbor)) via ONE aggregation — this
     # IS the first propagate iteration with identity labels, minus its
     # join (neighbor labels equal the neighbors themselves). Composed
     # lazily into the first double-step's materialization (no own barrier).
-    labels = (
+    seed = (
         sym.groupBy(F.col("a").alias("node"))
         .agg(F.min("b").alias("nbr_min"))
         .select("node", F.least("node", "nbr_min").alias("component_id"))
     )
-    while True:
-        # Round-12 job-count cut (the loop's wall at bench scale was pure
-        # per-job latency, not data): TWO propagation steps compose lazily
-        # into ONE materialization. The min-label fixpoint is unique, so
-        # stride is semantics-free, and testing only the SECOND step's
-        # changed flag is exact: step 2 changing nothing means its input
-        # was already a fixpoint.
-        updated = step_flagged(step(labels)).localCheckpoint(eager=True)
-        # fixpoint test: only emptiness matters, so isEmpty (take-1 over
-        # the checkpointed frame, short-circuits at the first changed row)
-        # instead of a full count job per iteration
-        converged = updated.filter("changed").isEmpty()
-        labels = updated.drop("changed")
-        if converged:
-            break
-    return labels
+    # fixpoint test: only emptiness matters, so isEmpty (take-1 over the
+    # checkpointed frame, short-circuits at the first changed row) instead
+    # of a full count job per iteration
+    return _iterate(
+        seed, step, done=lambda _, new: new.filter("changed").isEmpty()
+    ).drop("changed")
 
 
 def _canonical_edges(e: DataFrame) -> DataFrame:
+    """An (a, b) edge list as a set of undirected edges: self-loops
+    dropped, each edge once with ``a < b``."""
     return (
         e.filter(F.col("a") != F.col("b"))
         .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         .distinct()
     )
+
+
+def _symmetric(e: DataFrame) -> DataFrame:
+    """Both directions of an (a, b) edge list."""
+    return e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+
+
+def _iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    rounds: int | None = None,
+    done: Callable[[DataFrame, DataFrame], bool] | None = None,
+    limit: int | None = None,
+) -> DataFrame:
+    """The graph operators' one checkpointed loop: each round materializes
+    ``step(state)`` with an eager ``localCheckpoint`` (the loop's lineage
+    stays a leaf, see :func:`dedup_connected_components`). Stops after
+    ``rounds`` rounds, or once ``done(prev, new)`` holds; raises if
+    ``limit`` rounds pass without it. The barriers run in the caller's
+    job group, so a tracer attributes them to the caller's span."""
+    for n in itertools.count() if rounds is None else range(rounds):
+        if n == limit:
+            raise RuntimeError(f"no fixpoint in {limit} rounds")
+        prev, state = state, step(state).localCheckpoint(eager=True)
+        if done is not None and done(prev, state):
+            break
+    return state
 
 
 def connected_components_star(edges: DataFrame, max_iter: int = 64) -> DataFrame:
@@ -1304,19 +1319,18 @@ def connected_components_star(edges: DataFrame, max_iter: int = 64) -> DataFrame
     component's minimum, read off directly as labels. Convergence is
     checked exactly (symmetric set difference — two subtracts over the
     contracted, ever-shrinking edge set); at extreme scale swap that for a
-    (count, hash-sum) signature comparison. Each round localCheckpoints to
-    keep the loop's lineage flat, same rationale as the propagate loop."""
+    (count, hash-sum) signature comparison. The rounds run on
+    :func:`_iterate`, like the propagate loop's; ``max_iter`` rounds
+    without a fixpoint raise."""
     nodes = (
         edges.select(F.col("a").alias("node"))
         .unionByName(edges.select(F.col("b").alias("node")))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    e = _canonical_edges(edges).localCheckpoint(eager=True)
-    for _ in range(max_iter):
-        sym = e.unionByName(
-            e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
+
+    def step(e: DataFrame) -> DataFrame:
+        sym = _symmetric(e)
         mins = sym.groupBy("a").agg(F.min("b").alias("mb"))
         m = F.least(F.col("a"), F.col("mb"))
         large = (
@@ -1324,10 +1338,7 @@ def connected_components_star(edges: DataFrame, max_iter: int = 64) -> DataFrame
             .filter(F.col("b") > F.col("a"))
             .select(F.col("b").alias("a"), m.alias("b"))
         )
-        le = _canonical_edges(large)
-        sym2 = le.unionByName(
-            le.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
+        sym2 = _symmetric(_canonical_edges(large))
         mins2 = sym2.groupBy("a").agg(F.min("b").alias("mb"))
         m2 = F.least(F.col("a"), F.col("mb"))
         small = (
@@ -1340,22 +1351,21 @@ def connected_components_star(edges: DataFrame, max_iter: int = 64) -> DataFrame
                 )
             )
         )
-        new_e = _canonical_edges(small).localCheckpoint(eager=True)
-        # fixpoint test: both frames are canonical DISTINCT edge sets, so
-        # equal cardinality plus one empty set-difference proves equality —
-        # two cheap count jobs over checkpointed leaves replace the second
-        # shuffling exceptAll, and the difference job only runs at all in
-        # the (usually final) rounds where the counts already agree
-        converged = (
-            new_e.count() == e.count() and new_e.exceptAll(e).isEmpty()
-        )
-        e = new_e
-        if converged:
-            break
-    else:
-        raise RuntimeError(
-            f"star contraction did not converge in {max_iter} rounds"
-        )
+        return _canonical_edges(small)
+
+    # fixpoint test: both frames are canonical DISTINCT edge sets, so
+    # equal cardinality plus one empty set-difference proves equality —
+    # two cheap count jobs over checkpointed leaves replace the second
+    # shuffling exceptAll, and the difference job only runs at all in
+    # the (usually final) rounds where the counts already agree
+    e = _iterate(
+        _canonical_edges(edges).localCheckpoint(eager=True),
+        step,
+        done=lambda prev, new: (
+            new.count() == prev.count() and new.exceptAll(prev).isEmpty()
+        ),
+        limit=max_iter,
+    )
     # fixpoint edge set is a star forest (a = component min, b = member)
     stars = e.select(F.col("b").alias("node"), F.col("a").alias("cid"))
     return (
@@ -2557,15 +2567,9 @@ def dedup_blocking_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the deduplicated candidate count; both inputs are 1-row broadcast
     aggregates."""
     pairs = dedup_minhash_lsh_pairs(spark, sf_dir)
-    cand = (
-        pairs.filter(F.col("doc_a") != F.col("doc_b"))
-        .select(
-            F.least("doc_a", "doc_b").alias("a"),
-            F.greatest("doc_a", "doc_b").alias("b"),
-        )
-        .distinct()
-        .agg(F.count("*").alias("n_candidates"))
-    )
+    cand = _canonical_edges(
+        pairs.selectExpr("doc_a AS a", "doc_b AS b")
+    ).agg(F.count("*").alias("n_candidates"))
     n = (
         read_star_parquet(spark, f"{sf_dir}/documents.parquet")
         .agg(F.count("*").alias("n_docs"))
@@ -2616,14 +2620,7 @@ def dedup_simhash_hamming_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "simhash"
     ).localCheckpoint(eager=True)
     pairs = dedup_minhash_lsh_pairs(spark, sf_dir)
-    cand = (
-        pairs.filter(F.col("doc_a") != F.col("doc_b"))
-        .select(
-            F.least("doc_a", "doc_b").alias("a"),
-            F.greatest("doc_a", "doc_b").alias("b"),
-        )
-        .distinct()
-    )
+    cand = _canonical_edges(pairs.selectExpr("doc_a AS a", "doc_b AS b"))
     sa = sh.select(F.col("doc_id").alias("a"), F.col("simhash").alias("ha"))
     sb = sh.select(F.col("doc_id").alias("b"), F.col("simhash").alias("hb"))
     return (
@@ -2742,14 +2739,7 @@ def dedup_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same shape.""".replace("{K}", str(K))
     sigs = minhash_signatures(spark, sf_dir).localCheckpoint(eager=True)
     pairs = dedup_minhash_lsh_pairs(spark, sf_dir)
-    cand = (
-        pairs.filter(F.col("doc_a") != F.col("doc_b"))
-        .select(
-            F.least("doc_a", "doc_b").alias("a"),
-            F.greatest("doc_a", "doc_b").alias("b"),
-        )
-        .distinct()
-    )
+    cand = _canonical_edges(pairs.selectExpr("doc_a AS a", "doc_b AS b"))
     sa = sigs.select(
         F.col("doc_id").alias("a"),
         *[F.col(f"mh{i}").alias(f"a{i}") for i in range(K)],
@@ -2843,14 +2833,7 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_star_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "source"
     )
-    cand = (
-        pairs.filter(F.col("doc_a") != F.col("doc_b"))
-        .select(
-            F.least("doc_a", "doc_b").alias("a"),
-            F.greatest("doc_a", "doc_b").alias("b"),
-        )
-        .distinct()
-    )
+    cand = _canonical_edges(pairs.selectExpr("doc_a AS a", "doc_b AS b"))
     da = docs.select(F.col("doc_id").alias("a"), F.col("source").alias("sa"))
     db = docs.select(F.col("doc_id").alias("b"), F.col("source").alias("sb"))
     return (

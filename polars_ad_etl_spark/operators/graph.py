@@ -23,8 +23,10 @@ hash-match.
 the same key) and one groupBy(dst) SUM with map-side partial aggregation.
 That is the canonical BSP PageRank data layout; the edge list never
 materializes more than once (localCheckpoint after construction), and the
-driver holds nothing but loop control. At 100 TB the edge table would be
-bucketed by ``src`` so the per-iteration join is shuffle-free.
+driver holds nothing but loop control: every iterative operator here runs
+its rounds on ``dedup._iterate``, the loop connected components uses. At
+100 TB the edge table would be bucketed by ``src`` so the per-iteration
+join is shuffle-free.
 """
 
 from __future__ import annotations
@@ -33,7 +35,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from polars_ad_etl_spark.operators.dedup import (
+    _canonical_edges,
+    _iterate,
     _lsh_pairs_oracle,
+    _symmetric,
     dedup_minhash_lsh_pairs,
 )
 from polars_ad_etl_spark.operators.registry import register
@@ -51,13 +56,7 @@ def pagerank_fixed_point(edges: DataFrame, n_iter: int = N_ITER) -> DataFrame:
     ≥ 1 and there is no dangling-mass term. All arithmetic is exact integer
     (div / multiply / SUM), so the result is independent of partitioning —
     the property the DuckDB oracle relies on."""
-    sym = (
-        edges.filter(F.col("a") != F.col("b"))
-        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    )
-    sym = sym.unionByName(
-        sym.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = _symmetric(edges.filter(F.col("a") != F.col("b"))).toDF("src", "dst")
     deg = sym.groupBy("src").agg(F.count("*").alias("outdeg"))
     # attach outdeg once so the loop joins a single prepared edge table
     edges_deg = sym.join(deg, "src").localCheckpoint(eager=True)
@@ -68,11 +67,12 @@ def pagerank_fixed_point(edges: DataFrame, n_iter: int = N_ITER) -> DataFrame:
         .select("id", F.expr(f"{SCALE} div n").alias("pr"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(n_iter):
+
+    def step(pr: DataFrame) -> DataFrame:
         contrib = edges_deg.join(pr, edges_deg.src == pr.id).select(
             "dst", F.expr("pr div outdeg").alias("c")
         )
-        pr = (
+        return (
             contrib.groupBy("dst")
             .agg(F.sum("c").alias("s"))
             .crossJoin(F.broadcast(n_row))
@@ -83,8 +83,9 @@ def pagerank_fixed_point(edges: DataFrame, n_iter: int = N_ITER) -> DataFrame:
                     f" + ({DAMP_NUM} * s) div {DAMP_DEN}"
                 ).alias("pr"),
             )
-            .localCheckpoint(eager=True)
         )
+
+    pr = _iterate(pr, step, rounds=n_iter)
     return pr.select(F.col("id").alias("node"), F.col("pr").alias("pagerank_fp"))
 
 
@@ -174,9 +175,9 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # makes the result a pure function of the graph, so DuckDB replays the
 # identical unrolled rounds; a pytest asserts an extra round is a no-op at
 # test scale, i.e. the fixed count reaches the true fixpoint there. Each
-# round is one degree aggregation + two semi-joins, lineage truncated with
-# localCheckpoint (the dedup-CC pattern); at 100 TB the edge list is
-# bucketed by src so rounds reuse the partitioning.
+# round is one degree aggregation + two semi-joins, checkpointed by
+# ``dedup._iterate`` (the connected-components loop); at 100 TB the edge
+# list is bucketed by src so rounds reuse the partitioning.
 K_CORE = 2
 CORE_ROUNDS = 3
 
@@ -184,23 +185,16 @@ CORE_ROUNDS = 3
 def kcore_edges(edges: DataFrame, k: int = K_CORE, rounds: int = CORE_ROUNDS) -> DataFrame:
     """Peel an undirected edge list (columns ``a``, ``b``) for ``rounds``
     iterations; returns the surviving symmetric edge list (src, dst)."""
-    sym = edges.filter(F.col("a") != F.col("b")).select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    )
-    sym = sym.unionByName(
-        sym.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-    for _ in range(rounds):
-        deg = sym.groupBy("src").agg(F.count("*").alias("c"))
+    sym = _symmetric(edges.filter(F.col("a") != F.col("b"))).toDF("src", "dst")
+
+    def peel(e: DataFrame) -> DataFrame:
+        deg = e.groupBy("src").agg(F.count("*").alias("c"))
         keep = deg.filter(F.col("c") >= k).select("src")
-        sym = (
-            sym.join(keep, "src", "left_semi")
-            .join(
-                keep.select(F.col("src").alias("dst")), "dst", "left_semi"
-            )
-            .localCheckpoint(eager=True)
+        return e.join(keep, "src", "left_semi").join(
+            keep.select(F.col("src").alias("dst")), "dst", "left_semi"
         )
-    return sym
+
+    return _iterate(sym.localCheckpoint(eager=True), peel, rounds=rounds)
 
 
 def _kcore_oracle() -> str:
@@ -283,18 +277,10 @@ def graph_clustering_coefficients(spark: SparkSession, sf_dir: str) -> DataFrame
     wedge fan-out is Σ deg², the quantity [[profile_key_skew]]-style
     diagnostics bound before running at scale."""
     pairs = dedup_minhash_lsh_pairs(spark, sf_dir)
-    e = (
-        pairs.filter(F.col("doc_a") != F.col("doc_b"))
-        .select(
-            F.least("doc_a", "doc_b").alias("a"),
-            F.greatest("doc_a", "doc_b").alias("b"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sym = e.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
-        e.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
+    e = _canonical_edges(
+        pairs.selectExpr("doc_a AS a", "doc_b AS b")
+    ).localCheckpoint(eager=True)
+    sym = _symmetric(e).toDF("src", "dst")
     deg = sym.groupBy("src").agg(F.count("*").alias("degree"))
     w1 = sym.select(F.col("src").alias("node"), F.col("dst").alias("u"))
     w2 = sym.select(F.col("src").alias("node2"), F.col("dst").alias("w"))

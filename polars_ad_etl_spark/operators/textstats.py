@@ -6,6 +6,8 @@ no Python UDFs — and every query is oracle-checked against DuckDB.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -605,26 +607,16 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge table (rank, left symbol, right symbol, weighted pair frequency).
     See the section comment for the unrolled-iteration oracle strategy and
     the word-type-table scale shape."""
-    seqs = _bpe_words(spark, sf_dir).select(
-        "freq", F.expr(_CHSEQ).alias("seq")
+    tops, _ = _bpe_merges(
+        _bpe_words(spark, sf_dir).select("freq", F.expr(_CHSEQ).alias("seq"))
     )
-    tops = []
-    for k in range(1, N_BPE_MERGES + 1):
-        top = _bpe_top_pair(seqs).localCheckpoint(eager=True)
-        tops.append(top.select(F.lit(k).cast("int").alias("rank"), "l", "r", "pair_freq"))
-        t = top.select(
-            F.col("l").alias("_tl"), F.col("r").alias("_tr")
-        )
-        seqs = seqs.crossJoin(F.broadcast(t)).select(
-            "freq",
-            F.expr("replace(seq, _tl || '  ' || _tr, concat(_tl, _tr))").alias(
-                "seq"
-            ),
-        )
-    out = tops[0]
-    for t in tops[1:]:
-        out = out.unionByName(t)
-    return out
+    return functools.reduce(
+        DataFrame.unionByName,
+        (
+            top.select(F.lit(k).cast("int").alias("rank"), "l", "r", "pair_freq")
+            for k, top in enumerate(tops, 1)
+        ),
+    )
 
 
 # ----------------------------------------------------- BPE corpus encoding
@@ -633,14 +625,15 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per source, how many subword tokens the corpus costs — the number that
 # drives per-source compute budgeting and mixture weights. One tokenizer
 # for the whole mixture (the production shape), so merges come from the
-# same corpus-global unrolled trainer as `text_bpe_train_merges`.
+# same corpus-global unrolled loop as `text_bpe_train_merges`
+# (`_bpe_merges`, below).
 #
 # Degenerate-corpus guard (edge sweeps: a corpus whose words are all
 # single symbols trains ZERO merges): an empty argmax must leave sequences
-# UNCHANGED, not wipe them. Spark: left broadcast-nested-loop join on TRUE
-# + CASE (a crossJoin against an empty 1-row frame would delete every
-# word); DuckDB: COALESCE around the NULL-pattern replace (replace with a
-# NULL needle is NULL there).
+# UNCHANGED, not wipe them; both BPE queries apply merges this way. Spark:
+# left broadcast-nested-loop join on TRUE + CASE (a crossJoin against an
+# empty 1-row frame would delete every word); DuckDB: COALESCE around the
+# NULL-pattern replace (replace with a NULL needle is NULL there).
 #
 # Scale shape: encoding joins the per-(source, word) table against the
 # word-type encoding — both vocabulary-sized, not corpus-sized; the only
@@ -716,6 +709,18 @@ def _bpe_apply_merge_guarded(seqs: DataFrame, top: DataFrame) -> DataFrame:
     )
 
 
+def _bpe_merges(seqs: DataFrame) -> tuple[list[DataFrame], DataFrame]:
+    """The merge loop both BPE queries run: N_BPE_MERGES rounds of
+    checkpointed top pair, then that merge applied (identity once no pair
+    is left). Returns the per-round top pairs and the merged sequences."""
+    tops = []
+    for _ in range(N_BPE_MERGES):
+        top = _bpe_top_pair(seqs).localCheckpoint(eager=True)
+        tops.append(top)
+        seqs = _bpe_apply_merge_guarded(seqs, top)
+    return tops, seqs
+
+
 @register("text_bpe_encode_stats", oracle=_bpe_encode_oracle())
 def text_bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source corpus tokenization cost under the corpus-trained BPE
@@ -726,9 +731,7 @@ def text_bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     seqs = _bpe_words(spark, sf_dir).select(
         "w", "freq", F.expr(_CHSEQ).alias("seq")
     )
-    for _ in range(N_BPE_MERGES):
-        top = _bpe_top_pair(seqs).localCheckpoint(eager=True)
-        seqs = _bpe_apply_merge_guarded(seqs, top)
+    _, seqs = _bpe_merges(seqs)
     wtok = seqs.select(
         "w", F.size(F.split("seq", "  ")).cast("long").alias("n_tok")
     )

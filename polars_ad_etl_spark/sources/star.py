@@ -12,7 +12,7 @@ import re
 from pathlib import Path
 from weakref import WeakKeyDictionary
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _DATE_BOUND = re.compile(r"\d{4}-\d{2}-\d{2}")
@@ -288,25 +288,32 @@ EMBEDDING_MAX_ABS = 16.0
 EMBEDDING_DIM = 64
 
 
-def load_embeddings(spark: SparkSession, sf_dir: str | Path) -> DataFrame:
-    """The embeddings table with its vector contract applied: a row is
-    excluded when it has no vector (failed encoder batch), a vector of
+def embedding_contract() -> Column:
+    """The embeddings table's vector contract as one row predicate: a row
+    is excluded when it has no vector (failed encoder batch), a vector of
     other than ``EMBEDDING_DIM`` components (a ragged encoder batch), a
     zero vector (no cosine direction), or components outside (0, 16] in
     magnitude (NaN/Inf/overflow would poison the exact-integer distance
     arithmetic; real corpus components are < 0.6 — see the envelope math at
     operators/registry.py::_TABLE_CONTRACTS). Declared ONCE here for the
-    Spark side; the oracle side gets the equivalent predicate via
-    _apply_table_contracts. Both engines compare NaN as the largest
-    float, so `max(|x|) <= 16` excludes non-finite vectors identically."""
-    df = read_star_parquet(spark, Path(sf_dir) / "embeddings.parquet")
+    Spark side, batch (:func:`load_embeddings`) and stream
+    (streaming/embeddings.py) alike; the oracle side gets the equivalent
+    predicate via _apply_table_contracts. Both engines compare NaN as the
+    largest float, so `max(|x|) <= 16` excludes non-finite vectors
+    identically."""
     amax = F.array_max(F.transform(F.col("embedding"), F.abs))
-    return df.where(
+    return (
         F.col("embedding").isNotNull()
         & (F.size("embedding") == EMBEDDING_DIM)
         & (amax > 0)
         & (amax <= EMBEDDING_MAX_ABS)
     )
+
+
+def load_embeddings(spark: SparkSession, sf_dir: str | Path) -> DataFrame:
+    """The embeddings table with :func:`embedding_contract` applied."""
+    df = read_star_parquet(spark, Path(sf_dir) / "embeddings.parquet")
+    return df.where(embedding_contract())
 
 
 # ------------------------------------------------------- bucketed layouts

@@ -49,11 +49,7 @@ from polars_ad_etl_spark.operators.dedup import (
     _bucket_expr,
     _vec_is_batch,
 )
-from polars_ad_etl_spark.sources.star import (
-    EMBEDDING_DIM,
-    EMBEDDING_MAX_ABS,
-    read_star_parquet,
-)
+from polars_ad_etl_spark.sources.star import embedding_contract, load_embeddings
 from polars_ad_etl_spark.streaming.events import _dir_has_parquet, _is_directory
 
 _EMB_SCHEMA = T.StructType(
@@ -91,21 +87,6 @@ def _vector_key(col) -> F.Column:
     return F.md5(col.cast("string"))
 
 
-def _contract(e: DataFrame) -> DataFrame:
-    """The embeddings table contract (sources/star.py::load_embeddings),
-    restated for the stream source: no vector, a ragged vector, a zero
-    vector, or an out-of-envelope component excludes the row on BOTH the
-    corpus and the stream side, so the two engines of the lambda split see
-    one relation."""
-    amax = F.array_max(F.transform(F.col("embedding"), F.abs))
-    return e.where(
-        F.col("embedding").isNotNull()
-        & (F.size("embedding") == EMBEDDING_DIM)
-        & (amax > 0)
-        & (amax <= EMBEDDING_MAX_ABS)
-    )
-
-
 def corpus_vector_indexes(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -115,9 +96,7 @@ def corpus_vector_indexes(
     the bucket index is exactly the blocking layout the batch delta path
     and the ANN family share; here they derive from the standard 80/20
     split so stream and batch agree vector for vector."""
-    e = _contract(
-        read_star_parquet(spark, f"{sf_dir}/embeddings.parquet")
-    ).filter(~_vec_is_batch(F.col("vec_id")))
+    e = load_embeddings(spark, sf_dir).filter(~_vec_is_batch(F.col("vec_id")))
     corpus_vk = e.select(_vector_key(F.col("embedding")).alias("vk")).distinct()
     corpus_bv = e.select(
         F.col("vec_id").alias("cid"),
@@ -175,8 +154,10 @@ def _admit_vec_batch(
     from pyspark.sql import Window as W
 
     spark = batch_df.sparkSession
-    s = _contract(batch_df).filter(_vec_is_batch(F.col("vec_id"))).select(
-        "vec_id", "embedding", _vector_key(F.col("embedding")).alias("vk")
+    s = (
+        batch_df.where(embedding_contract())
+        .filter(_vec_is_batch(F.col("vec_id")))
+        .select("vec_id", "embedding", _vector_key(F.col("embedding")).alias("vk"))
     )
     # First-batch detection is an EXPLICIT directory probe (round-11
     # advice, low): only a missing/empty seen-index directory falls back
@@ -255,7 +236,7 @@ def _admit_vec_batch(
     # arrival adjudicated that content) instead of re-running the
     # vector join.
     (
-        _contract(batch_df)
+        batch_df.where(embedding_contract())
         .filter(_vec_is_batch(F.col("vec_id")))
         .select(_vector_key(F.col("embedding")).alias("vk"))
         .distinct()

@@ -462,24 +462,36 @@ def run_rate_stress(
     # pipeline's micro-batches to zero completed batches (measured —
     # that's why the Python-API rows read 0 rows/s on the first r7 run).
     spark.sparkContext._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    # skip the first two batches (cold state store / codegen) for the ceiling
-    steady = batches[2:] or batches
-    rates = sorted(b["proc_rows_per_sec"] for b in steady) or [0]
     return {
         "query_error": str(err)[:300] if err else None,
         "source": "rate",
         "offered_rows_per_sec": rows_per_sec,
         "n_users": n_users,
         "duration_s": duration_s,
+        **steady_summary(batches, rate_kind),
+        "batches": batches,
+    }
+
+
+def steady_summary(batches: list[dict], rate_kind: str) -> dict:
+    """Rates and batch latency of a rate stress's completed batches. The
+    first two run on a cold state store and cold codegen and are skipped.
+    A stress with no batch past them has no steady reading: its rates and
+    batch p50 are None, never its cold batches' figures."""
+    steady = batches[2:]
+    rates = [b["proc_rows_per_sec"] for b in steady]
+    return {
         "n_batches": len(batches),
-        f"{rate_kind}_rows_per_sec_p50": round(statistics.median(rates), 1),
-        f"{rate_kind}_rows_per_sec_max": round(max(rates), 1),
-        "batch_ms_p50": statistics.median(
-            sorted(b["ms"] for b in steady) or [0]
+        "n_steady_batches": len(steady),
+        f"{rate_kind}_rows_per_sec_p50": (
+            round(statistics.median(rates), 1) if rates else None
+        ),
+        f"{rate_kind}_rows_per_sec_max": round(max(rates), 1) if rates else None,
+        "batch_ms_p50": (
+            statistics.median(b["ms"] for b in steady) if steady else None
         ),
         "max_state_rows": max((b["state_rows"] for b in batches), default=0),
         "max_state_bytes": max((b["state_bytes"] for b in batches), default=0),
-        "batches": batches,
     }
 
 

@@ -255,6 +255,68 @@ def test_star_cc_random_graphs_agree(spark):
         assert got == want, f"seed={seed}"
 
 
+def test_graph_loop_barrier_counts(spark):
+    """Each checkpointed graph loop runs a fixed number of Spark jobs on a
+    short chain plus a triangle. The counts pin every barrier (checkpoint
+    and convergence test) so a refactor of the loops cannot add or drop
+    one unnoticed; the results are checked against union-find as well.
+    AQE is off for the count: its query-stage jobs race each other (the
+    same propagate call ran 28 to 30 jobs with it on), so only without it
+    is a job count a function of the plans alone."""
+    from test_ad_path import _job_group, _jobs
+
+    from polars_ad_etl_spark.operators.dedup import (
+        connected_components_propagate,
+        connected_components_star,
+    )
+    from polars_ad_etl_spark.operators.graph import (
+        kcore_edges,
+        pagerank_fixed_point,
+    )
+
+    # a 6-edge chain, a triangle and a duplicated reversed edge: 10 edges
+    edges = [(i * 3 + 7, (i + 1) * 3 + 7) for i in range(6)]
+    edges += [(1000, 1001), (1001, 1002), (1002, 1000), (1001, 1000)]
+    df = spark.createDataFrame(edges, "a long, b long").localCheckpoint(
+        eager=True
+    )
+    # one partition: propagate takes its coalesce(1) path
+    one = df.coalesce(1).localCheckpoint(eager=True)
+    loops = {
+        "propagate": lambda: connected_components_propagate(df),
+        "propagate_1part": lambda: connected_components_propagate(one),
+        "star": lambda: connected_components_star(df),
+        "kcore": lambda: kcore_edges(df),
+        "pagerank": lambda: pagerank_fixed_point(df),
+    }
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    out = {}
+    try:
+        for name, build in loops.items():
+            with _job_group(sc, f"test-graph-loop-{name}"):
+                out[name] = build()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    counts = {name: _jobs(sc, f"test-graph-loop-{name}") for name in loops}
+    assert counts == {
+        "propagate": 7,
+        "propagate_1part": 7,
+        "star": 17,
+        "kcore": 4,
+        "pagerank": 9,
+    }
+    want = _union_find(edges)
+    for name in ("propagate", "propagate_1part", "star"):
+        got = {r.node: r.component_id for r in out[name].collect()}
+        assert got == want, name
+    # the chain peels away in 3 rounds; the triangle keeps both directions
+    # of every input edge, the duplicated one twice
+    tri = edges[6:] + [(b, a) for a, b in edges[6:]]
+    assert sorted(map(tuple, out["kcore"].collect())) == sorted(tri)
+
+
 def test_semdedup_keep_rule_invariants(spark):
     """SemDeDup keep decisions follow the smaller-id pairwise reduction:
     the minimum vec_id of every cluster is always kept, is_kept is exactly

@@ -21,7 +21,12 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
 
-from streaming_bench import PIPELINES, prepare_source, run_pipeline  # noqa: E402
+from streaming_bench import (  # noqa: E402
+    PIPELINES,
+    prepare_source,
+    run_pipeline,
+    steady_summary,
+)
 
 
 @pytest.fixture(scope="module")
@@ -52,3 +57,30 @@ def test_streaming_throughput_floor(bench_results):
     # the floor catches order-of-magnitude regressions only.
     assert bench_results["hourly_rollup"]["rows_per_sec"] > 1_000
     assert bench_results["stateful_dedup"]["rows_per_sec"] > 500
+
+
+def _batch(rate, ms, state_rows):
+    return {"rows": 1000, "ms": ms, "proc_rows_per_sec": rate,
+            "state_rows": state_rows, "state_bytes": 10 * state_rows}
+
+
+def test_rate_stress_summary_has_no_steady_rate_from_cold_batches():
+    """A stress that completed only its two cold batches reports no rate:
+    its cold batches' rows/s is not its ceiling."""
+    cold = [_batch(570_000.0, 16_300, 5), _batch(410_000.0, 15_900, 7)]
+    s = steady_summary(cold, "ceiling")
+    assert s["n_batches"] == 2 and s["n_steady_batches"] == 0
+    assert s["ceiling_rows_per_sec_p50"] is None
+    assert s["ceiling_rows_per_sec_max"] is None
+    assert s["batch_ms_p50"] is None
+    assert (s["max_state_rows"], s["max_state_bytes"]) == (7, 70)
+    # from the third batch on, only the steady batches count
+    s = steady_summary(
+        cold + [_batch(90_000.0, 950, 3), _batch(110_000.0, 850, 4)],
+        "unsaturated",
+    )
+    assert s["n_steady_batches"] == 2
+    assert s["unsaturated_rows_per_sec_p50"] == 100_000.0
+    assert s["unsaturated_rows_per_sec_max"] == 110_000.0
+    assert s["batch_ms_p50"] == 900
+    assert s["max_state_rows"] == 7
