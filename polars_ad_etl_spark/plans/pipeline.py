@@ -22,11 +22,9 @@ detect-source -> clean -> standardize -> union (reference
   cast in a single ``selectExpr``), so building the plan costs one py4j call
   per frame rather than several per column.
 
-Scale notes (100 TB design): source detection is schema-based, so it needs
-per-file *schemas*, never per-file data — for CSV we read only the header line
-driver-side; files that detect to the same source are then globbed into a
-single scan so Spark parallelizes over all of them. Per-file (or per-group)
-schema inference is issued from a small thread pool, so those jobs overlap.
+Source detection is schema-based, so it needs per-file *schemas*, never
+per-file data. Each file's read (with its inference jobs) is issued from a
+small thread pool, so those jobs overlap.
 """
 
 from __future__ import annotations
@@ -102,33 +100,13 @@ class MultiSourceAdETL:
         ]
         return self
 
+    # Kept only because perfbench's tracer wraps this name; it goes with the
+    # next change to the benchmark.
+    read_tabular_files_grouped = read_tabular_files
+
     def with_frames(self, frames: list[tuple[str | None, DataFrame]]) -> "MultiSourceAdETL":
         """Inject in-memory frames (testing / non-file sources like Sheets)."""
         self.frames = [TaggedFrame(tag, df) for tag, df in frames]
-        return self
-
-    def read_tabular_files_grouped(self, raw_dir: str | Path) -> "MultiSourceAdETL":
-        """Scale ingest (SURVEY §7.3-3): header-only source detection, then
-        one distributed scan per (source, header) group — at 100k files the
-        driver does O(#files) single-line reads and Spark does a handful of
-        parallel scans, instead of 100k per-file inference passes. Frames
-        arrive pre-tagged; ``assign_source`` keeps the tag and only adds the
-        provenance column."""
-        from polars_ad_etl_spark.sources.tabular import read_csv_dir_grouped
-
-        def detect(cols: list[str]) -> str:
-            # detection must see the names the fingerprints are declared on —
-            # i.e. post-capitalize names when the pipeline capitalizes
-            if self.config.capitalize:
-                cols = [c.capitalize() for c in cols]
-            return self._detect_source(cols)
-
-        self.frames = [
-            TaggedFrame(src, df, ";".join(paths))
-            for src, paths, df in read_csv_dir_grouped(
-                self.spark, raw_dir, detect
-            )
-        ]
         return self
 
     def capitalize_col_names(self) -> "MultiSourceAdETL":

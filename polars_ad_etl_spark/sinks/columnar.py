@@ -1,10 +1,11 @@
-"""Columnar sink/source beyond parquet: ORC with partitioned layout.
+"""Columnar sink beyond parquet: ORC with partitioned layout.
 
 Spark ships an ORC reader/writer with the same predicate-pushdown +
 partition-pruning contract as parquet; a lakehouse pipeline that feeds
 Presto/Hive consumers writes ORC. This module is the thin, tested wrapper:
-Hive-style ``partitionBy`` layout on write, and scans that keep partition
-pruning + pushed filters (asserted in tests/test_connectors.py).
+Hive-style ``partitionBy`` layout on write; a plain ``spark.read.orc`` of
+the result keeps partition pruning + pushed filters (asserted in
+tests/test_connectors.py).
 
 Scale notes: partition columns become directories — keep their cardinality
 bounded (event_type here: 6 values) or small files proliferate; within a
@@ -15,7 +16,7 @@ clustering that makes those stats selective).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_orc(
@@ -25,7 +26,3 @@ def write_orc(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.orc(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(path)

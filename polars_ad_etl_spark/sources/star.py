@@ -69,9 +69,7 @@ def scan_width(spark: SparkSession, path: str | Path) -> int:
     return width
 
 
-def spread_scan(
-    df: DataFrame, key: str | None = None, width: int | None = None
-) -> DataFrame:
+def spread_scan(df: DataFrame, width: int, key: str | None = None) -> DataFrame:
     """Scale-adaptive compute spread for per-row-EXPENSIVE projections
     (shingling, MinHash, SimHash, CDC rolling hashes).
 
@@ -96,12 +94,9 @@ def spread_scan(
     sort-before-repartition pass on the map side.
 
     ``width``: the scan's planned partition count from :func:`scan_width`
-    (metadata-only). When omitted, falls back to the ``df.rdd`` probe —
-    callers on the hot construction path should pass it."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    planned = width if width is not None else df.rdd.getNumPartitions()
-    if planned >= target:
+    (metadata-only, so deciding costs no job or RDD conversion)."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if width >= target:
         return df
     if key is not None:
         return df.repartition(target, key)

@@ -39,14 +39,6 @@ from pyspark.sql.types import (
 
 from polars_ad_etl_spark.sources import xlsx_lite
 
-_TYPES = {
-    "boolean": BooleanType(),
-    "long": LongType(),
-    "bigint": LongType(),
-    "double": DoubleType(),
-    "string": StringType(),
-}
-
 
 def _expand(path: str) -> list[str]:
     if os.path.isdir(path):
@@ -78,7 +70,10 @@ class XlsxDataSource(DataSource):
             raise ValueError(f"no .xlsx files under {path!r}")
         names, _data, types = _parse_file(files[0], self.options.get("sheet"))
         return StructType(
-            [StructField(n, _TYPES[t], True) for n, t in zip(names, types)]
+            [
+                StructField(n, xlsx_lite.SPARK_TYPES[t], True)
+                for n, t in zip(names, types)
+            ]
         )
 
     def reader(self, schema: StructType) -> "XlsxReader":

@@ -1,8 +1,10 @@
-"""Minimal stdlib-only ``.xlsx`` reader (SURVEY §2.1 S2).
+"""Minimal ``.xlsx`` parser built on the standard library (SURVEY §2.1 S2),
+the one Excel reader of the package (``tabular.read_excel``,
+``XlsxDataSource``).
 
 The reference ingests Excel ad reports via ``pl.read_excel`` backed by the
 fastexcel dependency (reference ``multi_source_ad_etl.py:101-102``,
-``pyproject.toml:8``). This environment ships no Excel engine — but an
+``pyproject.toml:8``). The package depends on no Excel engine — an
 ``.xlsx`` file is a ZIP of XML parts, and the subset ad reports use (one
 worksheet of shared/inline strings, numbers, and booleans) parses in ~100
 lines of ``zipfile`` + ``xml.etree``. This keeps the connector real instead
@@ -22,6 +24,8 @@ import re
 import zipfile
 from pathlib import Path
 from xml.etree import ElementTree
+
+from pyspark.sql import types as T
 
 _CELL_REF = re.compile(r"([A-Z]+)(\d+)")
 
@@ -82,9 +86,18 @@ def read_xlsx_rows(
 
     Cell types handled: shared strings (t="s"), inline strings
     (t="inlineStr"), cached formula strings (t="str"), booleans (t="b"),
-    numbers (default; int when integral). Empty cells are None.
+    numbers (default; int when integral). Empty cells are None. A file that
+    is not a zip archive (a legacy binary ``.xls``, or a corrupt file) raises
+    ``ValueError`` naming it.
     """
-    with zipfile.ZipFile(str(path)) as zf:
+    try:
+        zf = zipfile.ZipFile(str(path))
+    except zipfile.BadZipFile:
+        raise ValueError(
+            f"{path} is not an .xlsx workbook: it is a legacy .xls or a "
+            "corrupt file; save it as .xlsx"
+        ) from None
+    with zf:
         strings = _shared_strings(zf)
         root = ElementTree.fromstring(zf.read(_sheet_part(zf, sheet)))
         rows: list[list[object]] = []
@@ -126,15 +139,24 @@ def read_xlsx_rows(
     return [r + [None] * (width - len(r)) for r in rows]
 
 
+# The Spark type of each label ``normalize_columns`` emits.
+SPARK_TYPES = {
+    "boolean": T.BooleanType(),
+    "double": T.DoubleType(),
+    "long": T.LongType(),
+    "string": T.StringType(),
+}
+
+
 def normalize_columns(
     header: list[object], data: list[list[object]]
 ) -> tuple[list[str], list[list[object]], list[str]]:
     """Whole-table type normalization, mirroring the reference's full-file
     inference (``infer_schema_length=None``): a column where every non-null
     value is numeric stays numeric (float if any float), a pure-bool column
-    stays bool, anything mixed collapses to string. Returns explicit Spark
-    type names per column (all-null columns are string) so the caller never
-    relies on row-based inference."""
+    stays bool, anything mixed collapses to string. Returns a type label per
+    column (a key of ``SPARK_TYPES``; all-null columns are string) so the
+    caller never relies on row-based inference."""
     names = [str(h) if h is not None else f"col_{i}" for i, h in enumerate(header)]
     cols = list(zip(*data)) if data else [() for _ in names]
     out_cols: list[list[object]] = []

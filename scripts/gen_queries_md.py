@@ -1,9 +1,11 @@
 #!/usr/bin/env python
 """Regenerate QUERIES.md (registry index) from the live registry.
 
-Previously the generator lived only in this file's git history; keeping it
-as a script means the line numbers in the table can be refreshed after any
-refactor with `python scripts/gen_queries_md.py`.
+Each row names the query's module and function (`operators/x.py::fn`), not
+a line number, so an edit that only shifts lines within a module leaves the
+index unchanged; adding, removing or renaming a query, moving it to another
+module, or changing its oracle still changes it. Regenerate with
+`python scripts/gen_queries_md.py`.
 """
 
 from __future__ import annotations
@@ -41,9 +43,8 @@ def render() -> str:
         src = Path(inspect.getsourcefile(fn)).relative_to(
             _ROOT / "polars_ad_etl_spark"
         )
-        line = inspect.getsourcelines(fn)[1]
         oracle = SPECIAL.get(name, "yes" if name in ORACLES else "rows-only")
-        rows.append(f"| `{name}` | `{src}:{line}` | {oracle} |")
+        rows.append(f"| `{name}` | `{src}::{fn.__name__}` | {oracle} |")
     return HEADER.format(n=len(QUERIES), m=len(ORACLES)) + "\n".join(rows) + "\n"
 
 

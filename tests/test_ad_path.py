@@ -16,11 +16,7 @@ from polars_ad_etl_spark.pipelines import apsl, export_daily, like_eat
 from polars_ad_etl_spark.plans import MultiSourceAdETL, PipelineConfig
 from polars_ad_etl_spark.plans.pipeline import SourceDetectionError
 from polars_ad_etl_spark.plans.schema import Date, Float64, Int64, String
-from polars_ad_etl_spark.sources.tabular import (
-    EmptyDirectoryError,
-    read_csv_dir_grouped,
-    read_tabular_dir,
-)
+from polars_ad_etl_spark.sources.tabular import EmptyDirectoryError, read_tabular_dir
 from test_pipelines_golden import APSL_META, APSL_TIKTOK, APSL_X
 
 LIKE_EAT_META = """일,캠페인 이름,광고 세트 이름,광고 이름,웹사이트 URL,지출 금액 (KRW),노출,빈도,도달,링크 클릭,공유 항목이 포함된 장바구니에 담기,공유 항목이 포함된 구매,공유 항목의 구매 전환값,동영상 25% 재생,동영상 50% 재생,동영상 75% 재생,동영상 95% 재생,동영상 100% 재생,동영상 재생,THRUPLAY
@@ -74,39 +70,15 @@ def test_read_tabular_dir_sorted_and_in_callers_job_group(spark, tmp_path):
     assert _jobs(sc, "test-read-dir") == 2 * len(names)
 
 
-def test_grouped_read_order_and_job_group(spark, tmp_path):
-    _write(tmp_path, {
-        "b2.csv": "Day,Clicks\n2026-01-05,3\n",
-        "a2.csv": "Day,Spend\n2026-01-03,20\n",
-        "b1.csv": "Day,Clicks\n2026-01-04,7\n",
-        "a1.csv": "Day,Spend\n2026-01-02,10\n",
-    })
-    sc = spark.sparkContext
-    with _job_group(sc, "test-read-grouped"):
-        groups = read_csv_dir_grouped(
-            spark, tmp_path, lambda cols: "S" if "Spend" in cols else "C"
-        )
-    assert [(src, [os.path.basename(p) for p in paths]) for src, paths, _ in groups] == [
-        ("S", ["a1.csv", "a2.csv"]),
-        ("C", ["b1.csv", "b2.csv"]),
-    ]
-    assert sorted(r["Spend"] for r in groups[0][2].collect()) == [10, 20]
-    assert sorted(r["Clicks"] for r in groups[1][2].collect()) == [3, 7]
-    assert _jobs(sc, "test-read-grouped") >= 2 * len(groups)
-
-
-def test_empty_dir_raises_on_both_read_paths(spark, tmp_path):
+def test_empty_dir_and_empty_csv_raise(spark, tmp_path):
     (tmp_path / "notes.txt").write_text("not tabular")
     with pytest.raises(EmptyDirectoryError):
         read_tabular_dir(spark, tmp_path)
-    with pytest.raises(EmptyDirectoryError):
-        read_csv_dir_grouped(spark, tmp_path, lambda cols: "S")
-    # a 0-byte CSV has no columns, so neither path can detect its source
+    # a 0-byte CSV has no columns, so its source cannot be detected
     (tmp_path / "empty.csv").write_bytes(b"")
-    for read in ("read_tabular_files", "read_tabular_files_grouped"):
-        etl = MultiSourceAdETL(spark, apsl.config())
-        with pytest.raises(SourceDetectionError, match=r"columns \[\]"):
-            getattr(etl, read)(tmp_path).assign_source()
+    etl = MultiSourceAdETL(spark, apsl.config())
+    with pytest.raises(SourceDetectionError, match=r"columns \[\]"):
+        etl.read_tabular_files(tmp_path).assign_source()
 
 
 # ------------------------------------------------------------- standardize

@@ -1,5 +1,5 @@
 """Connector tests: Sheets pure logic (date serials, value matrices, row
-constructor), Excel gating, header-only CSV detection path."""
+constructor), the Excel reader's errors, directory dispatch."""
 
 import datetime as dt
 import json
@@ -12,7 +12,7 @@ from polars_ad_etl_spark.sources.sheets import (
     dataframe_to_values,
     dates_to_excel_serial,
 )
-from polars_ad_etl_spark.sources.tabular import read_csv_header, read_excel
+from polars_ad_etl_spark.sources.tabular import read_excel, read_tabular_dir
 
 
 def test_date_to_excel_serial(spark):
@@ -53,23 +53,21 @@ def test_sheets_network_methods_gated(spark):
         svc.get_dataframe("key", "sheet", "A1:B2")
 
 
-def test_excel_gated_without_engine(spark, tmp_path):
+def test_malformed_xlsx_raises_value_error(spark, tmp_path):
     p = tmp_path / "x.xlsx"
     p.write_bytes(b"PK\x03\x04fake")
-    try:
-        import openpyxl  # noqa: F401
-
-        pytest.skip("openpyxl present; gating not exercised")
-    except ImportError:
-        pass
-    with pytest.raises(Exception):  # pandas raises ImportError-derived
+    with pytest.raises(ValueError, match=r"x\.xlsx is not an \.xlsx workbook"):
         read_excel(spark, p)
 
 
-def test_read_csv_header_only(tmp_path):
-    p = tmp_path / "h.csv"
-    p.write_text("﻿Day,Amount spent (USD)\n2024-01-01,1.0\n", encoding="utf-8")
-    assert read_csv_header(p) == ["Day", "Amount spent (USD)"]  # BOM stripped
+def test_legacy_xls_in_raw_dir_raises_value_error(spark, tmp_path):
+    """A binary (OLE2/BIFF) ``.xls`` in a raw directory is dispatched, not
+    skipped, and fails with an error naming the file and the fix."""
+    (tmp_path / "old.xls").write_bytes(
+        b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1" + b"\x00" * 504
+    )
+    with pytest.raises(ValueError, match=r"old\.xls .*legacy \.xls.*save it as \.xlsx"):
+        read_tabular_dir(spark, tmp_path)
 
 
 def test_read_jsonl_and_parquet_dispatch(spark, tmp_path):
@@ -91,15 +89,13 @@ def test_read_jsonl_and_parquet_dispatch(spark, tmp_path):
 def test_orc_roundtrip_and_dispatch(spark, tmp_path):
     """ORC write -> read round-trips values, participates in the directory
     dispatch, and pushes filters down to the ORC scan."""
-    from polars_ad_etl_spark.sources.tabular import read_orc, read_tabular_dir
-
     src = spark.createDataFrame(
         [("2026-01-02", 10), ("2026-01-03", 20)], ["Day", "Spend"]
     )
     out = tmp_path / "orcdata"
     src.coalesce(1).write.orc(str(out))
     orc_file = next(p for p in out.iterdir() if p.suffix == ".orc")
-    df = read_orc(spark, orc_file)
+    df = spark.read.orc(str(orc_file))
     assert sorted(tuple(r) for r in df.collect()) == [
         ("2026-01-02", 10),
         ("2026-01-03", 20),
@@ -284,7 +280,7 @@ def test_orc_round_trip_partitioned_with_pruning(spark, tmp_path):
     """ORC sink/source: Hive-partitioned write round-trips values exactly,
     and a partition-key filter prunes at the scan (PartitionFilters), with
     data filters pushed to the ORC reader."""
-    from polars_ad_etl_spark.sinks.columnar import read_orc, write_orc
+    from polars_ad_etl_spark.sinks.columnar import write_orc
     from polars_ad_etl_spark.sources.star import load_events
 
     src = load_events(spark, "/root/testdata/sf0.001").select(
@@ -293,7 +289,7 @@ def test_orc_round_trip_partitioned_with_pruning(spark, tmp_path):
     path = str(tmp_path / "events_orc")
     write_orc(src, path, partition_by=("event_type",))
 
-    back = read_orc(spark, path)
+    back = spark.read.orc(path)
     assert back.count() == src.count()
     a = sorted(
         (r.event_id, r.user_id, r.event_type, r.value) for r in src.collect()

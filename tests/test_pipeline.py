@@ -202,46 +202,6 @@ def test_quarantine_cast_mode_splits_rows(spark, tmp_path):
     assert all(r.source == "S1" for r in quarantined)
 
 
-def test_grouped_ingest_equals_per_file(spark, tmp_path):
-    """The 100k-file scale path (header-only detection + one scan per
-    source group) must produce exactly the per-file pipeline's rows, with
-    fewer frames (one per source, not one per file)."""
-    from pyspark.sql.types import DateType, LongType, StringType
-
-    from polars_ad_etl_spark.plans.config import PipelineConfig
-    from polars_ad_etl_spark.plans.pipeline import MultiSourceAdETL
-
-    (tmp_path / "a1.csv").write_text("Day,Spend\n2026-01-02,10\n")
-    (tmp_path / "a2.csv").write_text("Day,Spend\n2026-01-03,20\n")
-    (tmp_path / "b1.csv").write_text("Day,Clicks\n2026-01-04,7\n")
-    cfg = PipelineConfig(
-        rename_config={
-            "SpendSrc": {"Day": "Day", "Spend": "Amount"},
-            "ClickSrc": {"Day": "Day", "Clicks": "Amount"},
-        },
-        standard_schema={
-            "Day": DateType(),
-            "Amount": LongType(),
-            "Source": StringType(),
-        },
-        source_config={"SpendSrc": ["Spend"], "ClickSrc": ["Clicks"]},
-    )
-    per_file = MultiSourceAdETL(spark, cfg).run(str(tmp_path))
-    grouped_etl = (
-        MultiSourceAdETL(spark, cfg)
-        .read_tabular_files_grouped(str(tmp_path))
-        .assign_source()
-        .clean_dataframes()
-        .standardize_dataframes()
-    )
-    assert len(grouped_etl.frames) == 2  # one frame per source, not per file
-    assert {f.source for f in grouped_etl.frames} == {"SpendSrc", "ClickSrc"}
-    grouped = grouped_etl.merge()
-    assert sorted(map(tuple, grouped.collect())) == sorted(
-        map(tuple, per_file.collect())
-    )
-
-
 def test_observe_quality_metrics_no_extra_pass(spark):
     """The Observation API yields row/null/sum metrics as a side effect of
     the caller's own action — no second scan, exact decimal totals."""
