@@ -528,10 +528,10 @@ def _stress_cli(name: str, mode: str, rate: int, duration: int) -> None:
         PIPELINES[name] = lambda ev: dedup_events_stream(ev, STRESS_DEDUP_WATERMARK)
     elif name not in PIPELINES:
         PIPELINES[name] = PIPELINES[base]
-    # cold-JVM warmup, discarded: compile the streaming plan + C2 the hot
-    # loops at a trivially sustainable rate — without this the measured
-    # run's first (backlogged) micro-batch can outlive the whole window
-    # and record zero completed batches (measured on session_windows)
+    # cold-JVM warmup, discarded: compile the streaming plan and JIT-warm
+    # the hot loops at a trivially sustainable rate — without this the
+    # measured run's first (backlogged) micro-batch can outlive the whole
+    # window and record zero completed batches (measured on session_windows)
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     run_rate_stress(spark, name, rows_per_sec=10_000, duration_s=8, mode=mode)
     r = run_rate_stress(
